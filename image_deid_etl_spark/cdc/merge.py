@@ -56,12 +56,13 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..lake.table import (
     SnapshotTable,
+    emit_change_rows,
     key_expr,
     lww_order_cols,
     lww_payload_hash,
@@ -565,39 +566,6 @@ class SimulatedCrash(RuntimeError):
     """Raised between apply and commit in crash/resume tests."""
 
 
-def resolve_lww(batch: DataFrame, key_cols: list[str], seq_col: str = "seq") -> DataFrame:
-    """One event per key: highest ``seq`` wins; duplicate deliveries of
-    the same seq are identical rows, so the pick is deterministic.
-
-    Window `row_number` (sort-based) is the default: benchmarked against
-    a `max_by(struct(...), seq)` hash aggregation (kept below), the sort
-    streams KB-sized content rows through the shuffle, while the hash agg
-    pins one full-content struct per key in every map/reduce task's hash
-    map — at ~1 KB content and 10^5+ keys per partition that spills and
-    loses badly (measured 2x slower at 8 cores). For narrow rows the
-    aggregate variant wins via map-side combine; pick per workload.
-    """
-    w = Window.partitionBy(*key_cols).orderBy(F.col(seq_col).desc())
-    return (
-        batch.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def resolve_lww_aggregate(batch: DataFrame, key_cols: list[str], seq_col: str = "seq") -> DataFrame:
-    """max_by hash-agg LWW variant — preferable for NARROW rows where
-    map-side combine collapses repeated keys before the shuffle."""
-    payload = [c for c in batch.columns if c not in key_cols and c != seq_col]
-    agg = batch.groupBy(*key_cols).agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload]), F.col(seq_col)).alias("_w"),
-        F.max(F.col(seq_col)).alias(seq_col),
-    )
-    return agg.select(
-        *key_cols, *[F.col(f"_w.{c}").alias(c) for c in payload], seq_col
-    )
-
-
 def _capture_changes_plan(
     key_cols: list[str],
     new_schema: T.StructType,
@@ -644,83 +612,64 @@ def _capture_changes_plan(
       identity unchanged (batch lost LWW) → nothing. `_deleted` is
       null-coalesced (legacy pre-engine-columns rows store null).
 
+    ONE pass: one key-partitioned exchange serves the rank window AND
+    the preimage pick (a `min_by` over the same key partitioning), the
+    scrub UDF runs once over the rank-1 rows only, and every classified
+    row is emitted from that one relation (`emit_change_rows`) — no
+    union re-executing the scan, the window or the UDF per change type.
     The plan re-reads the matched files when executed (after the commit —
     a concurrency loser must never clobber the winning commit's log), so
     capture costs one extra matched-file scan + one keyed window; the
-    caller persists the batch side so the feed read + scrub UDF are not
-    re-executed.
+    caller persists the batch side so the feed read is not re-executed.
     """
     cols_out = [f.name for f in new_schema.fields] + ["commit_seq"]
     if widen:
         ex_k = existing  # rescrub can change non-batch keys in matched files
     else:
-        batch_keys = incoming_o.select(*key_cols).distinct()
-        ex_k = existing.join(batch_keys, key_cols, "leftsemi")
-    both_k = ex_k.unionByName(incoming_o)
-    w_key = Window.partitionBy(*key_cols)
-    ranked = (
-        both_k.withColumn("_rn", F.row_number().over(w_rank))
-        # stored rows carry a real _fg (crc32 of their file); batch rows
-        # ride in with a null _fg — that marker finds the old winner
-        .withColumn(
-            "_pre_rn",
-            F.min(F.when(F.col("_fg").isNotNull(), F.col("_rn"))).over(w_key),
-        )
-    )
-    picks = ranked.filter(
-        (F.col("_rn") == 1) | (F.col("_rn") == F.col("_pre_rn"))
-    )
-    # post-variant columns precomputed as plain projections (a row can be
-    # BOTH pre and post — rank 1 == old winner — and must then carry raw
-    # bytes as preimage, scrubbed bytes as postimage)
-    post_over: dict[str, Column] = {}
-    if scrub_content:
-        picks = picks.withColumn("_cap_content", scrubbed(F.col("content")))
-        post_over["content"] = F.col("_cap_content")
-    if scrub_meta_col:
-        picks = picks.withColumn("_cap_meta", scrub_meta(F.col("meta")))
-        post_over["meta"] = F.col("_cap_meta")
-
-    def _post_col(name: str) -> Column:
-        return post_over.get(name, F.col(name))
-
-    row_pre_s = F.struct(
-        *[F.col(c).alias(c) for c in cols_out],
-        F.col("_deleted").alias("_deleted"),
+        # no distinct: a semi-join is indifferent to duplicate build keys,
+        # and the cached batch side broadcasts without a shuffle
+        ex_k = existing.join(incoming_o.select(*key_cols), key_cols, "leftsemi")
+    # resolves by name: raw stored bytes under the window, the scrubbed
+    # post-side values after it
+    row = F.struct(
+        *[F.col(c) for c in cols_out],
+        F.col("_deleted"),
         lww_payload_hash(new_schema.fields).alias("_ph"),
     )
-    row_post_s = F.struct(
-        *[_post_col(c).alias(c) for c in cols_out],
-        F.col("_deleted").alias("_deleted"),
-        lww_payload_hash(new_schema.fields, col_of=_post_col).alias("_ph"),
+    post = (
+        ex_k.unionByName(incoming_o)
+        .withColumn("_rn", F.row_number().over(w_rank))
+        # stored rows carry a real _fg (crc32 of their file); batch rows
+        # ride in with a null _fg, which min_by skips — the preimage is
+        # the best-ranked STORED row, raw bytes as stored
+        .withColumn(
+            "_pre",
+            F.min_by(
+                row, F.when(F.col("_fg").isNotNull(), F.col("_rn"))
+            ).over(Window.partitionBy(*key_cols)),
+        )
+        .filter(F.col("_rn") == 1)
     )
-    g = picks.groupBy(*key_cols).agg(
-        F.max_by(row_post_s, F.when(F.col("_rn") == 1, F.lit(1))).alias("_post"),
-        F.max_by(
-            row_pre_s, F.when(F.col("_rn") == F.col("_pre_rn"), F.lit(1))
-        ).alias("_pre"),
-    )
+    if scrub_content:
+        post = post.withColumn("content", scrubbed(F.col("content")))
+    if scrub_meta_col:
+        post = post.withColumn("meta", scrub_meta(F.col("meta")))
+    g = post.select(row.alias("_post"), "_pre")
     post_live = ~F.coalesce(F.col("_post._deleted"), F.lit(False))
     pre_live = F.col("_pre").isNotNull() & ~F.coalesce(
         F.col("_pre._deleted"), F.lit(False)
     )
-    unchanged = F.col("_post.commit_seq").eqNullSafe(
-        F.col("_pre.commit_seq")
-    ) & F.col("_post._ph").eqNullSafe(F.col("_pre._ph"))
-
-    def _proj(rows: DataFrame, side: str, ct: str) -> DataFrame:
-        return rows.select(
-            *[F.col(f"{side}.{c}").alias(c) for c in cols_out]
-        ).withColumn("_change_type", F.lit(ct))
-
-    ins = _proj(g.filter(post_live & ~pre_live), "_post", "insert")
-    upd_base = g.filter(post_live & pre_live & ~unchanged)
-    upd = _proj(upd_base, "_post", "update")
-    upd_pre = _proj(upd_base, "_pre", "update_preimage")
-    dels = _proj(g.filter(~post_live & pre_live), "_pre", "delete")
-    return (
-        ins.unionByName(upd).unionByName(upd_pre).unionByName(dels)
-    ).select(*cols_out, "_change_type")
+    changed = ~(
+        F.col("_post.commit_seq").eqNullSafe(F.col("_pre.commit_seq"))
+        & F.col("_post._ph").eqNullSafe(F.col("_pre._ph"))
+    )
+    upd = post_live & pre_live & changed
+    return emit_change_rows(g, cols_out, [
+        (post_live & ~pre_live, "_post", "insert"),
+        (upd, "_post", "update"),
+        (upd, "_pre", "update_preimage"),
+        (~post_live & pre_live, "_pre", "delete"),
+    ])
 
 
 def merge_into(

@@ -62,7 +62,7 @@ import uuid
 
 import pyarrow.parquet as pq
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -180,7 +180,7 @@ def _physical_read(spark, paths, fields, with_metadata: bool = False):
 GAP_GUARD_MAX = 32
 
 
-def lww_payload_hash(fields, col_of=None):
+def lww_payload_hash(fields):
     """Stable xxhash64 over the PAYLOAD columns of ``fields`` — the LWW
     tie-break hash (see `lww_order_cols`), also the row-identity
     component of the snapshot diff (`read_changes` /
@@ -190,14 +190,7 @@ def lww_payload_hash(fields, col_of=None):
     winner flipped) is a real state change the diff must report. Maps
     hash via key-sorted entry serialization so producer entry order
     never splits identities; engine columns are excluded so an existing
-    row and its re-delivered duplicate hash identically.
-
-    ``col_of`` (name → Column, default ``F.col``) lets a caller hash a
-    SUBSTITUTED variant of some columns without renaming the DataFrame —
-    the write-time change capture hashes the post-scrub values of
-    content/meta this way while the same row's preimage hashes raw."""
-    if col_of is None:
-        col_of = F.col
+    row and its re-delivered duplicate hash identically."""
     def _contains_map(dt) -> bool:
         if isinstance(dt, T.MapType):
             return True
@@ -220,7 +213,7 @@ def lww_payload_hash(fields, col_of=None):
             # could disagree. The comparator sorts by KEY ONLY: a default
             # struct sort would demand the VALUE type be orderable too and
             # raise on map<_, map<...>> payloads.
-            ent = F.map_entries(col_of(f.name))
+            ent = F.map_entries(F.col(f.name))
             col = F.to_json(
                 F.array_sort(
                     ent,
@@ -239,9 +232,9 @@ def lww_payload_hash(fields, col_of=None):
             # built in a different order can hash differently —
             # best-effort for the pathological same-seq case, but the
             # merge no longer fails analysis on such schemas.
-            col = F.to_json(col_of(f.name))
+            col = F.to_json(F.col(f.name))
         else:
-            col = col_of(f.name)
+            col = F.col(f.name)
         hash_parts.append(col)
     return F.xxhash64(*hash_parts)
 
@@ -262,6 +255,29 @@ def lww_order_cols(fields) -> list:
         F.col("_deleted").desc(),
         lww_payload_hash(fields).desc(),
     ]
+
+
+def emit_change_rows(
+    g: DataFrame, cols: list[str], branches: list[tuple[Column, str, str]]
+) -> DataFrame:
+    """Classified change rows from ONE relation in a single pass: for
+    each ``(cond, side, change_type)``, every row of ``g`` where ``cond``
+    holds emits the ``cols`` fields of its ``side`` struct column tagged
+    ``_change_type = change_type``. One `inline` over a per-row array of
+    ``when(cond, struct)`` — a union of filtered projections would
+    re-execute ``g``'s whole subtree (scan, exchange, window, UDF) once
+    per branch. Serves the write-time capture and both window folds."""
+    rows = F.array(*[
+        F.when(
+            cond,
+            F.struct(
+                *[F.col(f"{side}.{c}").alias(c) for c in cols],
+                F.lit(ct).alias("_change_type"),
+            ),
+        )
+        for cond, side, ct in branches
+    ])
+    return g.select(F.inline(F.array_compact(rows)))
 
 
 def _lww_latest_versions(df: DataFrame, key_cols: list[str] | None = None) -> DataFrame:
@@ -2756,26 +2772,13 @@ class SnapshotTable:
                 g, cols = self._fold_grouped(spark, to_id, sids)
                 alive = F.col("_last_ct") != "delete"
                 was_live = F.col("_first_ct") != "insert"
-                ins = (
-                    g.filter(alive & ~was_live)
-                    .select(*[F.col(f"_last.{c}").alias(c) for c in cols])
-                    .withColumn("_change_type", F.lit("insert"))
-                )
-                upd_base = g.filter(alive & was_live & ~self._fold_net_noop())
-                upd = upd_base.select(
-                    *[F.col(f"_last.{c}").alias(c) for c in cols]
-                ).withColumn("_change_type", F.lit("update"))
-                upd_pre = upd_base.select(
-                    *[F.col(f"_pre.{c}").alias(c) for c in cols]
-                ).withColumn("_change_type", F.lit("update_preimage"))
-                dels = (
-                    g.filter(~alive & was_live)
-                    .select(*[F.col(f"_pre.{c}").alias(c) for c in cols])
-                    .withColumn("_change_type", F.lit("delete"))
-                )
-                return (
-                    ins.unionByName(upd).unionByName(upd_pre).unionByName(dels)
-                ).select(*cols, "_change_type")
+                upd = alive & was_live & ~self._fold_net_noop()
+                return emit_change_rows(g, cols, [
+                    (alive & ~was_live, "_last", "insert"),
+                    (upd, "_last", "update"),
+                    (upd, "_pre", "update_preimage"),
+                    (~alive & was_live, "_pre", "delete"),
+                ])
         parts = self._snapshot_diff_parts(spark, from_snapshot_id, to_id)
         if parts is None:
             return self._empty_changes(spark, to_id)
@@ -2855,11 +2858,13 @@ class SnapshotTable:
         must match: full-ladder CoW merges write their own log from the
         ranked version sets the MERGE window already resolves
         (`cdc.merge._capture_changes_plan` → `write_changelog_rows`,
-        O(matched files + batch)); the MoR / adaptive-append / branch /
-        maintenance legs (which never rank stored state) and the heal
-        paths come HERE for the one extra diff per commit,
-        O(touched-bucket state). Capture-vs-diff parity is test-pinned
-        (`tests/test_changes.py`).
+        O(matched files + batch)); state-preserving rewrites publish
+        their empty log directly (`_publish_empty_changelog`); the MoR /
+        adaptive-append / branch / tombstone-GC legs (which never rank
+        stored state) and the heal paths come HERE for the one extra
+        diff per commit, O(touched-bucket state) — a metadata-only
+        commit's empty diff is published without one. Capture-vs-diff
+        parity is test-pinned (`tests/test_changes.py`).
         Idempotent: re-materializing overwrites atomically (_SUCCESS is
         the readiness marker). Publication is write-to-hidden-tmp +
         rename, so a `stream_changes` consumer tailing the directory
@@ -2879,23 +2884,34 @@ class SnapshotTable:
         parent = self.manifest(sid, with_files=False)["parent_id"]
         if parent is None:
             raise ValueError("snapshot 0 has no parent to diff against")
+        if self.changed_buckets(parent, sid) == set():
+            # metadata-only commit: no bucket's file set moved, so the
+            # diff is empty by construction — publish it without a job
+            return self._publish_changelog(None, sid)
         # single-commit classified snapshot diff (use_changelog=False:
         # this WRITES the log — it must never read one)
         ch = self.classified_changes(spark, parent, sid, use_changelog=False)
         return self._publish_changelog(ch, sid)
 
-    def _publish_changelog(self, ch: DataFrame, sid: int) -> str:
+    def _publish_changelog(self, ch: DataFrame | None, sid: int) -> str:
         """Atomically publish a classified change DataFrame as commit
         ``sid``'s log: write to a hidden tmp dir, rename into place —
         a `stream_changes` consumer tailing the directory never lists a
         half-written commit (crash-orphaned tmp dirs are swept by
-        `expire_snapshots`)."""
+        `expire_snapshots`). ``ch=None`` publishes an EMPTY log as a
+        bare ``_SUCCESS`` marker, with no Spark job: every log reader
+        passes `changelog_read_schema`, so a dir holding no data file
+        reads as an empty frame."""
         import shutil
         import uuid
 
         path = self._changelog_dir(sid)
         tmp = os.path.join(self.root, CHANGELOG, f".tmp-{uuid.uuid4().hex}")
-        ch.write.mode("overwrite").parquet(tmp)
+        if ch is None:
+            os.makedirs(tmp)
+            open(os.path.join(tmp, "_SUCCESS"), "w").close()
+        else:
+            ch.write.mode("overwrite").parquet(tmp)
         if os.path.exists(path):
             shutil.rmtree(path)
         os.rename(tmp, path)
@@ -2928,8 +2944,18 @@ class SnapshotTable:
         unhealable commit (expired manifests — the heal skips those
         too, and the window falls back to the diff/unserveable path
         either way). Common case cost: one ``changelog_ready`` stat."""
-        if self._branch is not None:
+        if self._branch is not None or not self._heal_log_gap(spark, snapshot_id):
             return None
+        cols = [f.name for f in self.schema(snapshot_id).fields] + ["commit_seq"]
+        return self._publish_changelog(
+            ch.select(*cols, "_change_type"), snapshot_id
+        )
+
+    def _heal_log_gap(self, spark: SparkSession, snapshot_id: int) -> bool:
+        """`write_changelog_rows`' gap guard: materialize the missing run
+        of logs just below ``snapshot_id``, oldest first. False when the
+        run is deeper than `GAP_GUARD_MAX` — then no log may be written
+        for ``snapshot_id`` either (see there)."""
         prev, fill = snapshot_id - 1, []
         while prev >= 1 and not self.changelog_ready(prev):
             if len(fill) >= GAP_GUARD_MAX:
@@ -2937,7 +2963,7 @@ class SnapshotTable:
                 # would turn one merge into O(history) synchronous diff
                 # jobs. Leave the WHOLE run (this log included: ascending
                 # order is the invariant) to the startup heal.
-                return None
+                return False
             try:
                 self.manifest(prev, with_files=False)
                 self.manifest(prev - 1, with_files=False)
@@ -2947,10 +2973,23 @@ class SnapshotTable:
             prev -= 1
         for sid in reversed(fill):
             self.materialize_changelog(spark, sid)
-        cols = [f.name for f in self.schema(snapshot_id).fields] + ["commit_seq"]
-        return self._publish_changelog(
-            ch.select(*cols, "_change_type"), snapshot_id
-        )
+        return True
+
+    def _publish_empty_changelog(self, spark: SparkSession, sid: int) -> None:
+        """Log of a STATE-PRESERVING commit ``sid`` (compaction without
+        tombstone GC, `rebucket`, `rebucket_step`): it rewrites files but
+        no live row — versions fold to the scan-time LWW winner,
+        tombstone winners stay — so its classified change set is empty
+        by construction. Publish that directly — no diff, no Spark job —
+        behind `write_changelog_rows`' gap guard, so logs keep landing in
+        ascending order. No-op unless the changelog is enabled, and on a
+        branch handle (see `materialize_changelog`)."""
+        if (
+            self.changelog_enabled()
+            and self._branch is None
+            and self._heal_log_gap(spark, sid)
+        ):
+            self._publish_changelog(None, sid)
 
     def _fold_grouped(
         self, spark: SparkSession, to_id: int, sids: list[int]
@@ -3036,19 +3075,11 @@ class SnapshotTable:
         if not sids:
             return self._empty_changes(spark, to_id)
         g, cols = self._fold_grouped(spark, to_id, sids)
-        ups = (
-            g.filter((F.col("_last_ct") != "delete") & ~self._fold_net_noop())
-            .select(*[F.col(f"_last.{c}").alias(c) for c in cols])
-            .withColumn("_change_type", F.lit("upsert"))
-        )
-        dels = (
-            g.filter(
-                (F.col("_last_ct") == "delete") & (F.col("_first_ct") != "insert")
-            )
-            .select(*[F.col(f"_pre.{c}").alias(c) for c in cols])
-            .withColumn("_change_type", F.lit("delete"))
-        )
-        return ups.unionByName(dels).select(*cols, "_change_type")
+        last_del = F.col("_last_ct") == "delete"
+        return emit_change_rows(g, cols, [
+            (~last_del & ~self._fold_net_noop(), "_last", "upsert"),
+            (last_del & (F.col("_first_ct") != "insert"), "_pre", "delete"),
+        ])
 
     # ------------------------------------------------------------------ #
     # write path (used by merge.py)
@@ -3775,7 +3806,7 @@ class SnapshotTable:
         # cleanly as long as the ingest landed in other buckets; a clash
         # on a compacted bucket raises and the caller just re-runs —
         # compaction is re-plannable by construction
-        self.commit_snapshot_optimistic(
+        snap = self.commit_snapshot_optimistic(
             m["snapshot_id"],
             new_files=entries,
             offsets=None,
@@ -3791,12 +3822,14 @@ class SnapshotTable:
             # commit_snapshot)
             unresolved_remove=set(todo) if resolve_versions else None,
         )
-        if self.changelog_enabled():
-            # same contiguity guard as `rebucket`: a CLI-only compact must
-            # not leave a hole in the per-commit log (the ingest loop's
-            # materialize_new_changelogs sees it ready and skips — no
-            # double cost on that path)
-            self.materialize_changelog(spark)
+        # a CLI-only compact must not leave a hole in the per-commit log
+        # (the ingest loop's materialize_new_changelogs sees it ready and
+        # skips). Dropping tombstones can resurrect superseded versions
+        # or erase a deleted key's last trace, so that leg keeps the diff.
+        if drop_tombstones_below is None:
+            self._publish_empty_changelog(spark, snap)
+        elif self.changelog_enabled():
+            self.materialize_changelog(spark, snap)
         return {
             "compacted_buckets": sorted(todo),
             "files_before": len(replaced),
@@ -3820,7 +3853,7 @@ class SnapshotTable:
         Logically a no-op: `read_changes` windows spanning the rebucket
         see no spurious changes — the lineage marker makes bucket
         pruning fall back to the (spec-independent) full diff, and the
-        per-commit changelog materializes empty.
+        per-commit changelog is written empty, never diffed.
 
         At 100 TB prefer power-of-two growth: with ``hash % 2n``, every
         new bucket index is congruent to its old index mod ``n``, so a
@@ -3851,7 +3884,7 @@ class SnapshotTable:
             next_sid=m["snapshot_id"] + 1,
             write_n_buckets=new_n_buckets,
         )
-        self.commit_snapshot(
+        snap = self.commit_snapshot(
             new_files=entries,
             offsets=m["offsets"],
             replaced_paths=replaced,
@@ -3861,11 +3894,10 @@ class SnapshotTable:
             expected_parent=m["snapshot_id"],
             unresolved_remove=unres or None,
         )
-        if self.changelog_enabled():
-            # keep the per-commit log contiguous even when no ingest run
-            # follows (CLI-only flow): a gap would silently disable the
-            # fold path for every window spanning this commit
-            self.materialize_changelog(spark)
+        # keep the per-commit log contiguous even when no ingest run
+        # follows (CLI-only flow): a gap would silently disable the fold
+        # path for every window spanning this commit
+        self._publish_empty_changelog(spark, snap)
         return {
             "from_buckets": old_n,
             "to_buckets": new_n_buckets,
@@ -3960,7 +3992,8 @@ class SnapshotTable:
 
         Logically a no-op per step: the lineage ``rebucket`` marker makes
         window pruning across it fall back to the spec-independent full
-        diff, and the per-commit changelog materializes empty."""
+        diff, and the per-commit changelog is written empty, never
+        diffed."""
         self._require_main("rebucket_step")
         m = self.manifest(with_files=False)
         spec = m["partition_spec"]
@@ -3993,7 +4026,7 @@ class SnapshotTable:
             new_spec["n_buckets"] = to
         else:
             new_spec = {**spec, "migrated": sorted(done)}
-        self.commit_snapshot(
+        snap = self.commit_snapshot(
             new_files=entries,
             offsets=m["offsets"],
             replaced_paths=replaced,
@@ -4005,8 +4038,7 @@ class SnapshotTable:
             expected_parent=m["snapshot_id"],
             unresolved_remove=unres_todo or None,
         )
-        if self.changelog_enabled():
-            self.materialize_changelog(spark)
+        self._publish_empty_changelog(spark, snap)
         return {
             "stepped": sorted(todo),
             "migrated": len(done),
