@@ -82,8 +82,3 @@ def is_date(col: Column, fmt: str = "yyyy-MM-dd") -> Column:
     """P15 — fuzzy date detection (`custom_etl.py:611-623`): try-parse,
     null ⇒ not a date. `try_to_date`-style, never throws."""
     return F.try_to_timestamp(col, F.lit(fmt)).isNotNull()
-
-
-def content_sha256(col: Column) -> Column:
-    """The per-row final-state invariant (`BASELINE.json` input_hint)."""
-    return F.sha2(col, 256)

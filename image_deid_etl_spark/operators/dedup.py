@@ -22,7 +22,7 @@ import os
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .scale import fan_out, shared
+from .scale import band_pairs, fan_out, shared
 
 TOKEN_SPLIT = r"\s+"
 
@@ -130,13 +130,10 @@ def lsh_candidate_pairs(
     candidate near-duplicates. Returns distinct (id_a < id_b) pairs.
 
     r6 plan surgery (VERDICT r5 "Next round" #2): ALL band keys are
-    emitted by ONE projection + `explode` — the single-pass pattern
-    `simhash_pairs` already used — instead of a per-band `unionByName`
-    over the unpersisted signature aggregate, which re-ran the whole
-    shingle→md5→groupBy DAG once per band. The banded frame is then
-    `shared` (materialized once) because a broadcast-hash self-join
-    cannot reuse exchanges between its two sides, so even the single-pass
-    plan would execute the signature DAG twice."""
+    emitted by ONE projection + `explode` instead of a per-band
+    `unionByName` over the unpersisted signature aggregate, which re-ran
+    the whole shingle→md5→groupBy DAG once per band. The pair join,
+    materialization and dedup are `scale.band_pairs`."""
     rows_per_band = num_hashes // bands
     band_exprs = [
         F.concat_ws(
@@ -146,24 +143,10 @@ def lsh_candidate_pairs(
         )
         for b in range(bands)
     ]
-    banded = shared(
-        sig.select(F.col(id_col), F.explode(F.array(*band_exprs)).alias("band_key"))
-    )
-    a = banded.alias("a")
-    b_ = banded.alias("b")
-    return (
-        a.join(b_, on="band_key")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        # repartition THEN dedup (r6): pair duplication is only ~`bands`×,
-        # so a pre-shuffle partial dedup barely shrinks the stream while
-        # its per-task hash map must hold the task's whole pair set —
-        # shuffle the raw 16-byte pairs instead and dedup once per key
-        # range (see similarity.lsh_bucketed_knn, measured ~8×)
-        .repartition("id_a")
-        .dropDuplicates()
+    return band_pairs(
+        sig.select(F.col(id_col), F.explode(F.array(*band_exprs)).alias("band_key")),
+        id_col,
+        "band_key",
     )
 
 
@@ -355,7 +338,7 @@ def simhash_pairs(
 ) -> DataFrame:
     """SimHash near-dup PAIR extraction — the stage round 1 lacked.
 
-    Hamming-band bucketing (same family as the MinHash band join above):
+    Hamming-band bucketing (the MinHash band join's `scale.band_pairs`):
     slice the `bits`-bit fingerprint into `bands` contiguous slices; docs
     sharing ANY slice are candidates (pigeonhole: a pair within Hamming
     distance < `bands` must agree on at least one slice, so recall is
@@ -376,31 +359,17 @@ def simhash_pairs(
         F.concat(F.lit(f"{b}|"), F.substring("simhash", b * width + 1, width))
         for b in range(bands)
     ]
-    # `shared` (r6): the broadcast self-join below cannot reuse exchanges
-    # between its sides, so both would re-run the tokenize+md5+groupBy DAG
-    banded = shared(
+    cand = band_pairs(
         fp.select(
             F.col(id_col),
             F.col("simhash"),
             F.explode(F.array(*band_exprs)).alias("band_key"),
-        )
-    )
-    a, c = banded.alias("a"), banded.alias("c")
-    cand = (
-        a.join(c, on="band_key")
-        .filter(F.col(f"a.{id_col}") < F.col(f"c.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"c.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("_sa"),
-            F.col("c.simhash").alias("_sb"),
-        )
-        # repartition THEN dedup (r6) — see lsh_candidate_pairs
-        .repartition("id_a")
-        .dropDuplicates()
+        ),
+        id_col,
+        "band_key",
     )
     hamming = sum(
-        (F.substring("_sa", i + 1, 1) != F.substring("_sb", i + 1, 1)).cast("int")
+        (F.substring("simhash_a", i + 1, 1) != F.substring("simhash_b", i + 1, 1)).cast("int")
         for i in range(bits)
     )
     return (

@@ -5,16 +5,18 @@ Two paths:
   via native `zip_with`/`aggregate` (JVM, codegen) — no Python.
 * `lsh_bucketed_knn` — the scale path: sign-bit LSH buckets from fixed
   deterministic hyperplanes; candidates only join within a bucket, so at
-  100 TB the quadratic blowup is bounded by bucket occupancy. Probes all
-  buckets within Hamming distance 0 (exact-bucket) by default; recall is
-  traded via `n_planes`.
+  100 TB the quadratic blowup is bounded by bucket occupancy. Probes the
+  home bucket plus every Hamming-1 bucket by default (``multiprobe``);
+  recall is traded via `n_planes`. Its candidate stage
+  (`lsh_candidate_vectors`, also behind the embedding near-dup query)
+  runs through `scale.band_pairs`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .scale import fan_out, shared
+from .scale import band_pairs, fan_out
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -205,24 +207,6 @@ def _hyperplane(plane: int, dim: int) -> list[float]:
     return [(((i * 37 + plane * 101) % 19) - 9) / 9.0 for i in range(dim)]
 
 
-def lsh_bucket(vec: Column, dim: int, n_planes: int = 8) -> Column:
-    """Sign-bit bucket id as a bit-string column (portable, no int width)."""
-    bits = []
-    for p in range(n_planes):
-        coeffs = _hyperplane(p, dim)
-        dot = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(c) for c in coeffs]),
-                lambda x, c: x.cast("double") * c,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def lsh_bucket_banded(vec: Column, dim: int, n_planes: int, band: int) -> Column:
     """Band `band`'s sign-bit bucket: planes ``band*n_planes ..`` — each
     band sees an independent set of hyperplanes (OR-amplification)."""
@@ -266,8 +250,9 @@ def _hamming1_probes(bucket: Column, n_planes: int) -> Column:
 
 def _score_pairs_arrow(batches):
     """Arrow-batched exact-cosine scoring for candidate pairs (guide
-    §4.2): input batches carry (_lo, _hi, _vlo, _vhi, _nlo, _nhi); output
-    (_lo, _hi, _cos).
+    §4.2): input batches carry, in this order, the two ids, the two
+    vectors and the two norms (e.g. id_a, id_b, _va, _vb, _na, _nb);
+    output is the two ids under their input names, then _cos.
 
     Floating-point contract: the dot product accumulates COLUMN BY COLUMN
     (`dot += a[:, j] * b[:, j]`), so each row performs the identical
@@ -285,18 +270,95 @@ def _score_pairs_arrow(batches):
     for pdf in batches:
         if not len(pdf):
             continue
-        va = np.stack(pdf["_vlo"].to_numpy()).astype(np.float64)
-        vb = np.stack(pdf["_vhi"].to_numpy()).astype(np.float64)
+        id_a, id_b, vec_a, vec_b, norm_a, norm_b = pdf.columns
+        va = np.stack(pdf[vec_a].to_numpy()).astype(np.float64)
+        vb = np.stack(pdf[vec_b].to_numpy()).astype(np.float64)
         dot = np.zeros(len(pdf))
         for j in range(va.shape[1]):
             dot += va[:, j] * vb[:, j]
         yield pd.DataFrame(
             {
-                "_lo": pdf["_lo"],
-                "_hi": pdf["_hi"],
-                "_cos": dot / (pdf["_nlo"].to_numpy() * pdf["_nhi"].to_numpy()),
+                id_a: pdf[id_a],
+                id_b: pdf[id_b],
+                "_cos": dot / (pdf[norm_a].to_numpy() * pdf[norm_b].to_numpy()),
             }
         )
+
+
+def lsh_band_table(
+    items: DataFrame, id_col: str, vec_col: str, dim: int, n_planes: int, n_bands: int
+) -> DataFrame:
+    """(id, bucket) rows: every band's sign-bit bucket of every vector.
+
+    All bands in ONE projection + explode — a single scan of the items
+    table computes every band's bucket (per-band union branches would
+    rescan the table once per band). `fan_out` first (r6): the
+    n_bands×n_planes hyperplane folds otherwise run inside a 1-split
+    scan stage."""
+    return fan_out(items.select(id_col, vec_col)).select(
+        F.col(id_col),
+        F.explode(
+            F.array(
+                *[lsh_bucket_banded(F.col(vec_col), dim, n_planes, b) for b in range(n_bands)]
+            )
+        ).alias("bucket"),
+    )
+
+
+def lsh_candidate_vectors(
+    items: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    n_planes: int,
+    n_bands: int,
+    multiprobe: bool,
+) -> DataFrame:
+    """Distinct banded sign-bit LSH candidate pairs (id_a < id_b) with
+    each side's vector and norm attached as ``_va``/``_vb`` and
+    ``_na``/``_nb`` — the input of `pair_cosine` and `_score_pairs_arrow`.
+
+    ``multiprobe``: the query side probes home + every Hamming-1 bucket;
+    the candidate side stays home-only (probing both sides would
+    double-count distance-2 pairs and square the fan-out). Probes are
+    string surgery on the band table's ALREADY-COMPUTED bucket column —
+    never a re-derivation from the raw vectors (that would rescan the
+    table and re-evaluate every hyperplane fold ~n_planes times per flip).
+
+    r6: the candidate relation is SYMMETRIC — (x, y) collides iff some
+    band's signatures are within Hamming distance ≤ 1 (home-home, or one
+    flip either way), a condition independent of which side probes. So
+    each unordered pair is generated (and later scored) ONCE.
+
+    Each vector's norm is computed ONCE here (identical expression,
+    identical double) instead of once per candidate pair inside
+    `cosine_similarity` — at ~10^2 candidates per vector that removes
+    ~2/3 of the interpreted fold work in the scoring stage."""
+
+    def probe(bucket: Column) -> Column:
+        return F.array_union(F.array(bucket), _hamming1_probes(bucket, n_planes))
+
+    pairs = band_pairs(
+        lsh_band_table(items, id_col, vec_col, dim, n_planes, n_bands),
+        id_col,
+        "bucket",
+        probe if multiprobe else None,
+    )
+    for side in ("a", "b"):
+        pairs = pairs.join(
+            items.select(
+                F.col(id_col).alias(f"id_{side}"),
+                F.col(vec_col).alias(f"_v{side}"),
+                _norm(F.col(vec_col)).alias(f"_n{side}"),
+            ),
+            f"id_{side}",
+        )
+    return pairs
+
+
+def pair_cosine() -> Column:
+    """Exact cosine of a `lsh_candidate_vectors` row, as the JVM fold."""
+    return _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
 
 
 def lsh_bucketed_knn(
@@ -329,8 +391,9 @@ def lsh_bucketed_knn(
     never degrades toward all-pairs. Use it to buy recall WITHOUT
     coarsening buckets (fewer planes would square bucket occupancy).
 
-    Scale shape (the standard LSH recall/cost dial, mirroring the MinHash
-    band join in `dedup.py`):
+    Scale shape (the standard LSH recall/cost dial; the pair generation is
+    `scale.band_pairs`, shared with the MinHash and SimHash band joins in
+    `dedup.py`):
 
     * ``n_planes`` bits per band keep each band's bucket occupancy small —
       the within-bucket candidate join is quadratic in occupancy, so MORE
@@ -340,121 +403,42 @@ def lsh_bucketed_knn(
     * ``n_bands`` independent plane sets OR-amplify recall: a true
       neighbor pair is found if ANY band agrees on all its bits.
 
-    Candidates are the distinct union of per-band equi-joins (bucketed,
-    never all-pairs; AQE splits residual hot buckets), then exact cosine
-    ranks the top-k.
+    Candidates (`lsh_candidate_vectors`) are the distinct union of the
+    per-band equi-joins (bucketed, never all-pairs; AQE splits residual
+    hot buckets), then exact cosine ranks the top-k.
     """
-    # all bands in ONE projection + explode — a single scan of the items
-    # table computes every band's bucket (per-band union branches would
-    # rescan the table once per band). r6: `fan_out` first (the plane
-    # folds otherwise run inside a 1-split scan stage), then `shared`
-    # so the candidate self-join's two sides — which a broadcast join
-    # cannot share — read ONE materialization of the n_bands×n_planes
-    # hyperplane folds instead of computing them twice.
-    base = fan_out(items.select(id_col, vec_col))
-    banded = shared(
-        base.select(
-            F.col(id_col),
-            F.explode(
-                F.array(
-                    *[
-                        lsh_bucket_banded(F.col(vec_col), dim, n_planes, b)
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("bucket"),
-        )
-    )
-    if multiprobe:
-        # query side probes home + every Hamming-1 bucket; the candidate
-        # side stays home-only (probing both sides would double-count
-        # distance-2 pairs and square the fan-out). Probes are string
-        # surgery on banded's ALREADY-COMPUTED bucket column — never a
-        # re-derivation from the raw vectors (that would rescan the table
-        # and re-evaluate every hyperplane fold ~n_planes times per flip).
-        probes = banded.select(
-            F.col(id_col),
-            F.explode(
-                F.array_union(
-                    F.array(F.col("bucket")),
-                    _hamming1_probes(F.col("bucket"), n_planes),
-                )
-            ).alias("bucket"),
-        )
-        a, c = probes.alias("a"), banded.alias("c")
-    else:
-        a, c = banded.alias("a"), banded.alias("c")
-    # r6: the candidate relation is SYMMETRIC — (x, y) collides iff some
-    # band's signatures are within Hamming distance ≤ 1 (home-home, or
-    # one flip either way), a condition independent of which side probes.
-    # So generate each unordered pair ONCE (lo < hi), score it once, and
-    # mirror the scored row with an inline explode: half the dedup
-    # volume, half the attach-join probes and half the exact-cosine folds
-    # of the both-directions formulation, for one extra (tiny, map-side
-    # WindowGroupLimit-pruned) exchange in front of the top-k window.
-    cand = (
-        a.join(c, on="bucket")
-        .filter(F.col(f"a.{id_col}") < F.col(f"c.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("_lo"),
-            F.col(f"c.{id_col}").alias("_hi"),
-        )
-        # hash-distribute the RAW pair stream, THEN dedup. Ordering
-        # matters enormously (measured 68 s → ~8 s at sf1.0):
-        # `.distinct()` before any repartition runs a map-side partial
-        # dedup whose per-task hash map must absorb the entire 10^8-row
-        # candidate stream (duplicate factor is only ~n_bands, so the map
-        # barely shrinks the shuffle while thrashing the heap — guide
-        # §2.3 "aggregate before you shuffle" explicitly does NOT pay off
-        # for near-unique keys). Shuffling the raw 16-byte pairs is
-        # cheap; the single post-shuffle aggregate dedups each key range
-        # once.
-        .repartition("_lo")
-        .dropDuplicates()
-    )
-    # each vector's norm is computed ONCE here (identical expression,
-    # identical double) instead of once per candidate pair inside
-    # `cosine_similarity` — at ~10^2 candidates per vector that removes
-    # ~2/3 of the interpreted fold work in the scoring stage.
-    vlo = items.select(
-        F.col(id_col).alias("_lo"),
-        F.col(vec_col).alias("_vlo"),
-        _norm(F.col(vec_col)).alias("_nlo"),
-    )
-    vhi = items.select(
-        F.col(id_col).alias("_hi"),
-        F.col(vec_col).alias("_vhi"),
-        _norm(F.col(vec_col)).alias("_nhi"),
-    )
+    cand = lsh_candidate_vectors(items, id_col, vec_col, dim, n_planes, n_bands, multiprobe)
     # cosine is direction-independent bit-for-bit: the fold multiplies
     # element pairs (commutative) in the same index order, and the norm
-    # product commutes — so one scored row serves both (lo→hi) and
-    # (hi→lo) without any float divergence from the two-sided plan.
+    # product commutes — so one scored row serves both (a→b) and (b→a)
+    # without any float divergence from the two-sided plan: the mirror
+    # is an inline explode, for one extra (tiny, map-side
+    # WindowGroupLimit-pruned) exchange in front of the top-k window.
     #
     # r6: the per-pair dot product is scored in an Arrow-batched
     # `mapInPandas` (guide §4.2 — batched numpy beats the interpreted
     # higher-order-function fold, which never joins whole-stage codegen;
-    # measured ~1.4× on the scoring stage at sf1.0). `_dot_seq_batch`
+    # measured ~1.4× on the scoring stage at sf1.0). `_score_pairs_arrow`
     # reproduces the JVM fold's rounding BIT-FOR-BIT: accumulating
     # column-by-column (`acc += a[:,j] * b[:,j]`) performs, per row, the
     # identical sequence of IEEE-double multiply/adds as the sequential
-    # `aggregate(zip_with(...))` fold — pinned by
-    # tests/test_scale_helpers.py-adjacent unit test in test_similarity.
+    # `aggregate(zip_with(...))` fold — pinned by the bit-view test in
+    # tests/test_similarity.py.
     id_type = items.schema[id_col].dataType.simpleString()
-    scored_half = cand.join(vlo, "_lo").join(vhi, "_hi").select(
-        "_lo", "_hi", "_vlo", "_vhi", "_nlo", "_nhi"
-    ).mapInPandas(_score_pairs_arrow, f"_lo {id_type}, _hi {id_type}, _cos double")
+    scored_half = cand.select("id_a", "id_b", "_va", "_vb", "_na", "_nb").mapInPandas(
+        _score_pairs_arrow, f"id_a {id_type}, id_b {id_type}, _cos double"
+    )
     scored = scored_half.select(
         F.explode(
             F.array(
                 F.struct(
-                    F.col("_lo").alias("query_id"),
-                    F.col("_hi").alias("neighbor_id"),
+                    F.col("id_a").alias("query_id"),
+                    F.col("id_b").alias("neighbor_id"),
                     F.col("_cos").alias("_cos"),
                 ),
                 F.struct(
-                    F.col("_hi").alias("query_id"),
-                    F.col("_lo").alias("neighbor_id"),
+                    F.col("id_b").alias("query_id"),
+                    F.col("id_a").alias("neighbor_id"),
                     F.col("_cos").alias("_cos"),
                 ),
             )

@@ -942,50 +942,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, any-band agreement recovers recall); exact cosine verifies
     within the candidate set."""
     e = _t(spark, sf_dir, "embeddings")
-    # r6: fan_out the plane folds, materialize the band table once for
-    # the self-join, and compute each side's norm per VECTOR rather than
-    # per candidate pair (identical expression → identical doubles) —
-    # the same plan surgery as `similarity.lsh_bucketed_knn`
-    banded = shared(
-        fan_out(e.select("vec_id", "embedding")).select(
-            "vec_id",
-            F.explode(
-                F.array(
-                    *[
-                        similarity.lsh_bucket_banded(F.col("embedding"), 64, 8, b)
-                        for b in range(2)
-                    ]
-                )
-            ).alias("bucket"),
-        )
-    )
-    a, c = banded.alias("a"), banded.alias("c")
-    cand = (
-        a.join(c, on="bucket")
-        .filter(F.col("a.vec_id") < F.col("c.vec_id"))
-        .select(F.col("a.vec_id").alias("id_a"), F.col("c.vec_id").alias("id_b"))
-        # repartition THEN dedup (r6) — see similarity.lsh_bucketed_knn
-        .repartition("id_a")
-        .dropDuplicates()
-    )
-    va = e.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("_va"),
-        similarity._norm(F.col("embedding")).alias("_na"),
-    )
-    vb = e.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("_vb"),
-        similarity._norm(F.col("embedding")).alias("_nb"),
+    cand = similarity.lsh_candidate_vectors(
+        e, "vec_id", "embedding", dim=64, n_planes=8, n_bands=2, multiprobe=False
     )
     return shared(
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .filter(
-            (similarity._dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")))
-            >= 0.25
-        )
-        .select("id_a", "id_b")
+        cand.filter(similarity.pair_cosine() >= 0.25).select("id_a", "id_b")
     ).orderBy("id_a", "id_b")
 
 
