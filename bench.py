@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS], plus the CDC replay throughput.
+sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the cores this process may
+run on), plus the CDC replay throughput.
 
 Prints ONE JSON line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -23,7 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from image_deid_etl_spark.plans import QUERIES  # noqa: E402
-from image_deid_etl_spark.session import build_session  # noqa: E402
+from image_deid_etl_spark.session import build_session, local_cpus  # noqa: E402
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -56,7 +57,7 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     n_cdc = int(os.environ.get("BENCH_CDC_EVENTS", "1000000"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 

@@ -1213,10 +1213,11 @@ def update_where(
     Returns ``{"updated", "files_rewritten", "snapshot_id"}``.
     """
     from ..lake.table import (
+        NONE,
         _lww_latest_versions,
         _norm_where,
         _priors_map,
-        _stats_entry_pred,
+        _stats_verdict,
         _where_cond,
     )
 
@@ -1282,14 +1283,10 @@ def update_where(
     resolved = sorted({*range(table.id_space())} - unres)
 
     # -- narrow matching scan over resolved buckets' candidate files ------
-    pred = (
-        _stats_entry_pred(where, _priors_map(table.schema().fields))
-        if where
-        else None
-    )
     entries = table.files_for_buckets({*resolved}) if resolved else []
-    if pred is not None:
-        entries = [f for f in entries if pred(f)]
+    if where:
+        verdict = _stats_verdict(where, _priors_map(table.schema().fields))
+        entries = [f for f in entries if verdict(f) != NONE]
     by_abs = {os.path.join(table.root, f["path"]): f["path"] for f in entries}
     matched_rel = {*()}
     n_resolved = 0

@@ -1193,7 +1193,7 @@ class SnapshotTable:
         batches (unresolved-bucket marks keep existing stacked versions
         correct either way); adding a ``stats_cols`` column records
         stats on future files while old files simply never prune
-        (missing stats = keep, `_stats_entry_pred`); ``cluster_by``
+        (missing stats = keep, `_stats_verdict`); ``cluster_by``
         takes effect at the next compaction.
 
         On a changelog-enabled result (enabling now, or already on)
@@ -2057,6 +2057,32 @@ class SnapshotTable:
             return spark.createDataFrame([], T.StructType(list(fields)))
         return _physical_read(spark, list(paths), fields, with_metadata)
 
+    def _select_snapshot(
+        self,
+        snapshot_id: int | None,
+        as_of_timestamp: float | None,
+        tag: str | None,
+        branch: str | None,
+    ) -> int | None:
+        """The snapshot id `read` / `count_rows`' pinning selectors name:
+        refuses more than one, resolves ``tag`` through `refs` and
+        ``as_of_timestamp`` through `snapshot_as_of`. A ``branch`` is the
+        caller's to route (its head lives behind `branch_handle`)."""
+        if sum(x is not None for x in (snapshot_id, as_of_timestamp, tag, branch)) > 1:
+            raise ValueError(
+                "pass at most one of snapshot_id / as_of_timestamp / tag / branch"
+            )
+        if tag is not None:
+            try:
+                snapshot_id = self.refs()[tag]
+            except KeyError:
+                raise ValueError(f"unknown tag {tag!r}") from None
+            if isinstance(snapshot_id, dict):
+                raise ValueError(f"ref {tag!r} is a branch — pass branch={tag!r}")
+        elif as_of_timestamp is not None:
+            snapshot_id = self.snapshot_as_of(as_of_timestamp)
+        return snapshot_id
+
     def read(
         self,
         spark: SparkSession,
@@ -2102,37 +2128,21 @@ class SnapshotTable:
         so dropping its file before the LWW window could resurrect the
         stale row — those buckets read fully, resolve, then filter.
         """
-        if sum(x is not None for x in (snapshot_id, as_of_timestamp, tag, branch)) > 1:
-            raise ValueError(
-                "pass at most one of snapshot_id / as_of_timestamp / tag / branch"
-            )
+        snapshot_id = self._select_snapshot(snapshot_id, as_of_timestamp, tag, branch)
         if branch is not None:
             # audit sugar: the staged state, scanned through the branch
             # pointer (same as branch_handle(branch).read(...))
             return self.branch_handle(branch).read(spark, where=where)
-        if tag is not None:
-            try:
-                snapshot_id = self.refs()[tag]
-            except KeyError:
-                raise ValueError(f"unknown tag {tag!r}") from None
-            if isinstance(snapshot_id, dict):
-                raise ValueError(
-                    f"ref {tag!r} is a branch — read it via branch_handle({tag!r})"
-                )
-        elif as_of_timestamp is not None:
-            snapshot_id = self.snapshot_as_of(as_of_timestamp)
         cols = [f.name for f in self.schema(snapshot_id).fields] + ["commit_seq"]
+        pred = None
         if where:
             # canonical spec forms + naive datetime bounds → tz-aware UTC,
             # ONCE, so the manifest pruning (_stat_norm: naive == UTC) and
             # the residual Spark filter (F.lit of a naive datetime resolves
             # via the SESSION timezone) agree on the same instant
             where = _norm_where(where)
-        pred = (
-            _stats_entry_pred(where, _priors_map(self.schema(snapshot_id).fields))
-            if where
-            else None
-        )
+            verdict = _stats_verdict(where, _priors_map(self.schema(snapshot_id).fields))
+            pred = lambda f: verdict(f) != NONE  # noqa: E731
         unres = self.unresolved_buckets(snapshot_id)
         if not unres:
             raw = self.read_raw(spark, snapshot_id, entry_pred=pred)
@@ -2164,12 +2174,13 @@ class SnapshotTable:
             resolved-bucket files that provably hold NO tombstones
             (``has_deletes`` recorded False — None means pre-upgrade /
             unknown, which scans) and, under a ``where``, whose stats
-            prove EVERY row matches (`_stats_full_match_pred`);
+            prove EVERY row matches (`_stats_verdict` ALL);
           * ``residue`` — resolved-bucket file paths (table-relative)
             that must scan exactly: possible tombstones, or a predicate
-            the stats can neither prove full nor prove empty. Files the
-            PRUNING dual proves empty are dropped entirely — they
-            contribute neither metadata rows nor scan I/O;
+            the stats can neither prove full nor prove empty (SOME).
+            Files whose stats prove the predicate empty (NONE) are
+            dropped entirely — they contribute neither metadata rows
+            nor scan I/O;
           * ``unres`` — unresolved bucket ids: multiple versions per key
             may coexist there, so file row counts mean nothing until the
             LWW window resolves them (same discipline as `read`, which
@@ -2177,25 +2188,55 @@ class SnapshotTable:
 
         ``where`` must already be `_norm_where`-normalized."""
         priors = _priors_map(self.schema(snapshot_id).fields) if where else None
-        prune = _stats_entry_pred(where, priors) if where else None
-        full = _stats_full_match_pred(where, priors) if where else None
+        verdict = _stats_verdict(where or {}, priors)
         unres = self.unresolved_buckets(snapshot_id)
         meta_rows = 0
         residue: list[str] = []
         for f in self.manifest(snapshot_id)["files"]:
             if f["bucket"] in unres:
                 continue  # counted by the bucket-resolve scan
-            if prune is not None and not prune(f):
+            v = verdict(f)
+            if v == NONE:
                 continue  # provably empty for the predicate
             if (
-                f.get("has_deletes") is False
+                v == ALL
+                and f.get("has_deletes") is False
                 and f.get("rows") is not None
-                and (full is None or full(f))
             ):
                 meta_rows += f["rows"]
             else:
                 residue.append(f["path"])
         return meta_rows, residue, unres
+
+    def _exact_scan(
+        self,
+        spark: SparkSession,
+        snapshot_id: int | None,
+        residue: list[str],
+        unres: set[int],
+    ) -> DataFrame | None:
+        """The exact half of `count_rows` / `min_max`: live rows of the
+        ``residue`` files (table-relative paths) plus the LWW-resolved
+        ``unres`` buckets, as ONE frame so the aggregate over it is one
+        Spark action. None when both are empty."""
+        scans = []
+        if residue:
+            scans.append(
+                self.scan_files(
+                    spark, [os.path.join(self.root, p) for p in residue], snapshot_id
+                )
+            )
+        if unres:
+            scans.append(
+                _lww_latest_versions(
+                    self.read_raw(spark, snapshot_id, buckets=sorted(unres)),
+                    key_cols=self.key_cols(),
+                )
+            )
+        if not scans:
+            return None
+        df = scans[0] if len(scans) == 1 else scans[0].unionByName(scans[1])
+        return df.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
 
     def count_rows(
         self,
@@ -2217,13 +2258,14 @@ class SnapshotTable:
         Every resolved-bucket file whose manifest entry records zero
         tombstones — and, under a ``where``, whose min/max ranges, null
         counts or value dictionary prove every row matches
-        (`_stats_full_match_pred`) — contributes its stored row count
+        (`_stats_verdict` ALL) — contributes its stored row count
         with no I/O at all. On a 100 TB table a full COUNT is then one
         manifest walk (O(files) driver work, zero executor work), and a
         predicate COUNT scans only the files straddling the predicate
         boundary. The residue — tombstone-bearing files, stats-unprovable
         files, unresolved (MoR/adaptive) buckets — is counted by the
-        exact read path, so the split is invisible in the result.
+        exact read path in one Spark action (`_exact_scan`), so the
+        split is invisible in the result.
 
         Snapshot selectors (`snapshot_id` / `as_of_timestamp` / `tag` /
         `branch`) match `read`'s and are mutually exclusive.
@@ -2231,43 +2273,17 @@ class SnapshotTable:
         count: ``rows`` / ``from_metadata`` / ``files_scanned`` /
         ``unresolved_buckets`` — the `count` CLI's output, and how an
         operator sees whether a hot count is metadata-served."""
-        if sum(x is not None for x in (snapshot_id, as_of_timestamp, tag, branch)) > 1:
-            raise ValueError(
-                "pass at most one of snapshot_id / as_of_timestamp / tag / branch"
-            )
+        snapshot_id = self._select_snapshot(snapshot_id, as_of_timestamp, tag, branch)
         if branch is not None:
             return self.branch_handle(branch).count_rows(
                 spark, where=where, detail=detail
             )
-        if tag is not None:
-            try:
-                snapshot_id = self.refs()[tag]
-            except KeyError:
-                raise ValueError(f"unknown tag {tag!r}") from None
-            if isinstance(snapshot_id, dict):
-                raise ValueError(
-                    f"ref {tag!r} is a branch — count it via branch=..."
-                )
-        elif as_of_timestamp is not None:
-            snapshot_id = self.snapshot_as_of(as_of_timestamp)
-        where_n = _norm_where(where) if where else None
+        where_n = _norm_where(where) if where else {}
         meta_rows, residue, unres = self._count_plan(snapshot_id, where_n)
         total = meta_rows
-        live = ~F.coalesce(F.col("_deleted"), F.lit(False))
-        cond = _where_cond(where_n) if where_n else F.lit(True)
-        if residue:
-            df = self.scan_files(
-                spark,
-                [os.path.join(self.root, p) for p in residue],
-                snapshot_id,
-            )
-            total += df.filter(live & cond).count()
-        if unres:
-            resolved = _lww_latest_versions(
-                self.read_raw(spark, snapshot_id, buckets=sorted(unres)),
-                key_cols=self.key_cols(),
-            )
-            total += resolved.filter(live & cond).count()
+        exact = self._exact_scan(spark, snapshot_id, residue, unres)
+        if exact is not None:
+            total += exact.filter(_where_cond(where_n)).count()
         if detail:
             return {
                 "rows": total,
@@ -2357,16 +2373,8 @@ class SnapshotTable:
         types = {f.name: f.dataType for f in self.schema(snapshot_id).fields}
         exact = {c for c in cols if isinstance(types[c], self._EXACT_STAT_TYPES)}
         priors = _priors_map(self.schema(snapshot_id).fields)
-
-        def lookup(st: dict, c: str):
-            v = st.get(c)
-            if v is None:
-                for old in priors.get(c, ()):
-                    v = st.get(old)
-                    if v is not None:
-                        break
-            return v
-
+        # a file whose stats prove a column all-null contributes nothing
+        all_null = {c: _stats_verdict({c: "not null"}, priors) for c in cols}
         unres = self.unresolved_buckets(snapshot_id)
         lo: dict[str, object] = {c: None for c in cols}
         hi: dict[str, object] = {c: None for c in cols}
@@ -2374,17 +2382,13 @@ class SnapshotTable:
         for f in self.manifest(snapshot_id)["files"]:
             if f["bucket"] in unres:
                 continue
-            st = f.get("col_stats") or {}
-            nc = f.get("null_counts") or {}
-            rows = f.get("rows")
             served = f.get("has_deletes") is False
             ranges = {}
             if served:
                 for c in cols:
-                    nulls = lookup(nc, c)
-                    if nulls is not None and rows is not None and nulls == rows:
-                        continue  # all null — contributes nothing, provably
-                    rng = lookup(st, c) if c in exact else None
+                    if all_null[c](f) == NONE:
+                        continue
+                    rng = _stat(f, "col_stats", c, priors) if c in exact else None
                     if not rng or rng[0] is None or rng[1] is None:
                         served = False
                         break
@@ -2395,27 +2399,8 @@ class SnapshotTable:
             for c, (a, b) in ranges.items():
                 lo[c] = a if lo[c] is None else min(lo[c], a)
                 hi[c] = b if hi[c] is None else max(hi[c], b)
-        scans = []
-        live = ~F.coalesce(F.col("_deleted"), F.lit(False))
-        if residue:
-            scans.append(
-                self.scan_files(
-                    spark,
-                    [os.path.join(self.root, p) for p in residue],
-                    snapshot_id,
-                ).filter(live)
-            )
-        if unres:
-            scans.append(
-                _lww_latest_versions(
-                    self.read_raw(spark, snapshot_id, buckets=sorted(unres)),
-                    key_cols=self.key_cols(),
-                ).filter(live)
-            )
-        if scans:
-            df = scans[0]
-            for s in scans[1:]:
-                df = df.unionByName(s)
+        df = self._exact_scan(spark, snapshot_id, residue, unres)
+        if df is not None:
             row = df.agg(
                 *[F.min(c).alias(f"_lo_{c}") for c in cols],
                 *[F.max(c).alias(f"_hi_{c}") for c in cols],
@@ -4558,213 +4543,131 @@ def _stat_norm(v):
     return v
 
 
-def _stats_entry_pred(where: dict, priors: dict[str, list[str]] | None = None):
-    """Manifest-entry predicate for `read(where=...)`: False only when a
-    file's recorded stats PROVABLY make the predicate empty there —
-    missing stats, unknown columns, or incomparable types keep the file
-    (conservative; the residual Spark filter guarantees exactness).
+#: a manifest entry's verdict on a `where` spec (`_stats_verdict`),
+#: ordered so a file's verdict is the MIN over its columns: one NONE
+#: column empties the file, and ALL needs every column ALL
+NONE, SOME, ALL = range(3)
 
-    Per spec form (`_norm_where` shapes):
-      * range ``(lo, hi)`` — prune when the ``col_stats`` min/max range
-        cannot intersect, or when the file is ALL NULL in the column
-        (``null_counts`` == rows; SQL comparison with NULL is never
-        true — such files have no min/max stats at all, so before null
-        counts they were "unknown, keep");
-      * ``{"in": [...]}`` — prune when every value misses the range (or
-        the file is all-null / the list is empty);
-      * ``"is null"`` — prune when the file's null count is 0;
-      * ``"not null"`` — prune when the file is all null.
 
-    ``priors`` (logical column → prior physical names) lets pruning use
-    stats a pre-rename file recorded under the column's old name."""
-    norm: dict[str, object] = {}
+def _stat(f: dict, kind: str, col: str, priors: dict[str, list[str]]):
+    """The ``kind`` stat (``col_stats`` / ``null_counts`` / ``dicts``) a
+    manifest entry records for ``col``: under its current name, else
+    under a prior name a pre-rename file recorded it by (``priors``:
+    logical column → prior physical names). None when not recorded."""
+    st = f.get(kind) or {}
+    for name in (col, *priors.get(col, ())):
+        v = st.get(name)
+        if v is not None:
+            return v
+    return None
+
+
+def _stats_verdict(where: dict, priors: dict[str, list[str]] | None = None):
+    """Manifest-entry evaluator for a `_norm_where`-normalized spec: maps
+    an entry to NONE (its recorded stats PROVE no row matches — the file
+    is pruned), ALL (they prove EVERY row matches — `count_rows` counts
+    it from metadata) or SOME (neither — it scans). Missing stats,
+    unknown columns and incomparable types give SOME: a wrong NONE
+    would drop rows and a wrong ALL would miscount, while SOME only
+    costs I/O, because every caller filters the scanned rows exactly.
+    One evaluator serves both questions (Iceberg keeps an inclusive and
+    a strict evaluator side by side), so pruning and proving cannot
+    drift apart.
+
+    Per column (`_col_verdict`), NONE checked before ALL:
+      * ``"is null"`` — NONE on a zero null count, ALL when every row is
+        null (``null_counts`` == ``rows``);
+      * ``"not null"`` — NONE on an all-null file, ALL on zero nulls;
+      * range ``(lo, hi)`` / ``{"in": [...]}`` — NONE on an all-null
+        file (SQL comparison with NULL is never true) or when the value
+        dictionary, then the ``col_stats`` min/max range, misses the
+        spec; ALL on zero nulls plus the dictionary, or else the range
+        (stored min >= lo, stored max <= hi), inside the spec. Parquet
+        stat truncation is directionally safe both ways: stored min <=
+        true min and stored max >= true max.
+
+    A range bound `_stat_norm` cannot canonicalize is read as OPEN for
+    pruning (the conservative reading) and bars ALL, where an open
+    reading would FABRICATE a proof; an IN list holding such a value
+    gives SOME outright."""
+    priors = priors or {}
+    specs: dict[str, object] = {}
     for c, spec in where.items():
-        if isinstance(spec, str):
-            norm[c] = spec
-        elif isinstance(spec, dict):
-            vals = [_stat_norm(v) for v in spec["in"]]
-            # a value with no canonical order (None) defeats range
-            # pruning for the whole list — mark unprunable
-            norm[c] = {"in": vals if all(v is not None for v in vals) else None}
+        if isinstance(spec, dict):
+            pts = [_stat_norm(v) for v in spec["in"]]
+            # an IN value is a point interval
+            spec = None if any(p is None for p in pts) else ([(p, p) for p in pts], True)
+        elif not isinstance(spec, str):
+            lo, hi = (_stat_norm(b) for b in spec)  # _stat_norm(None) is None
+            exact = all(n is not None or b is None for b, n in zip(spec, (lo, hi)))
+            spec = ([(lo, hi)], exact)
+        specs[c] = spec
+
+    def verdict(f: dict) -> int:
+        return min(
+            (
+                _col_verdict(
+                    spec,
+                    f.get("rows"),
+                    *(_stat(f, k, c, priors) for k in ("null_counts", "dicts", "col_stats")),
+                )
+                for c, spec in specs.items()
+            ),
+            default=ALL,
+        )
+
+    return verdict
+
+
+def _col_verdict(spec, rows, nulls, dv, rng) -> int:
+    """One column's `_stats_verdict`. ``spec`` is ``"is null"``, ``"not
+    null"``, None (an IN list with an unnormalizable value) or
+    ``(intervals, exact)``: closed `_stat_norm` intervals, a None end
+    open, and whether every given bound canonicalized. ``nulls`` /
+    ``dv`` / ``rng`` are the entry's null count, value dictionary and
+    min/max range, None when not recorded."""
+    all_null = nulls is not None and nulls == rows
+    if spec == "is null":
+        return NONE if nulls == 0 else ALL if all_null else SOME
+    if all_null:
+        return NONE  # NULL never satisfies NOT NULL, a range or IN
+    if spec == "not null":
+        return ALL if nulls == 0 else SOME
+    if spec is None:
+        return SOME
+    ivs, exact = spec
+
+    def inside(a, b):  # stored [a, b] lies within one spec interval
+        return any((lo is None or a >= lo) and (hi is None or b <= hi) for lo, hi in ivs)
+
+    # every row must compare TRUE, so any null — or an unrecorded null
+    # count — defeats an ALL proof
+    provable = exact and nulls == 0
+    proven = False
+    if dv is not None:
+        # exact membership beats min/max: a file whose RANGE spans the
+        # probed values but whose recorded value SET misses them is
+        # provably empty (the low-cardinality equality/IN case ranges
+        # cannot serve). An empty dict = all values null.
+        try:
+            hits = [inside(v, v) for v in dv]
+        except TypeError:
+            provable = False  # incomparable types — the dict decides nothing
         else:
-            lo, hi = spec
-            norm[c] = (
-                _stat_norm(lo) if lo is not None else None,
-                _stat_norm(hi) if hi is not None else None,
-            )
-    priors = priors or {}
-
-    def lookup(st: dict, c: str):
-        v = st.get(c)
-        if v is None:
-            for old in priors.get(c, ()):
-                v = st.get(old)
-                if v is not None:
-                    break
-        return v
-
-    def pred(f: dict) -> bool:
-        st = f.get("col_stats") or {}
-        nc = f.get("null_counts") or {}
-        rows = f.get("rows")
-        for c, spec in norm.items():
-            nulls = lookup(nc, c)
-            if spec == "is null":
-                if nulls == 0:
-                    return False
-                continue
-            all_null = nulls is not None and rows is not None and nulls == rows
-            if spec == "not null":
-                if all_null:
-                    return False
-                continue
-            if all_null:
-                return False  # range / IN: NULL never compares true
-            dv = lookup(f.get("dicts") or {}, c)
-            if dv is not None:
-                # exact membership beats min/max: a file whose RANGE spans
-                # the probed value but whose recorded value SET misses it
-                # is provably empty for the predicate (the low-cardinality
-                # equality/IN case ranges cannot serve). An empty dict =
-                # all values null = never compares true.
-                try:
-                    if isinstance(spec, dict):
-                        vals = spec["in"]
-                        if vals is not None and not any(v in dv for v in vals):
-                            return False
-                    else:
-                        d_lo, d_hi = spec
-                        if not any(
-                            (d_lo is None or v >= d_lo)
-                            and (d_hi is None or v <= d_hi)
-                            for v in dv
-                        ):
-                            return False
-                except TypeError:
-                    pass  # incomparable types — dict can't prune, fall through
-            rng = lookup(st, c)
-            if not rng or rng[0] is None or rng[1] is None:
-                continue
-            try:
-                if isinstance(spec, dict):
-                    vals = spec["in"]
-                    if vals is None:
-                        continue  # unnormalizable value in the list
-                    if not any(rng[0] <= v <= rng[1] for v in vals):
-                        return False
-                    continue
-                lo, hi = spec
-                if lo is not None and rng[1] < lo:
-                    return False
-                if hi is not None and rng[0] > hi:
-                    return False
-            except TypeError:
-                continue
-        return True
-
-    return pred
-
-
-def _stats_full_match_pred(where: dict, priors: dict[str, list[str]] | None = None):
-    """Dual of `_stats_entry_pred`: True only when a file's recorded
-    stats PROVE the predicate holds for EVERY row — the admission test
-    for `count_rows`' manifest-only counting. False means "not
-    provable", never "provably empty": callers route such files to the
-    exact scan, so a wrong False costs I/O, not correctness (the exact
-    dual of the pruner, where a wrong True does).
-
-    Proof obligations per normalized (`_norm_where`) spec form:
-
-      * range ``(lo, hi)`` — no nulls recorded (``null_counts`` == 0),
-        and either the exact value DICTIONARY lies fully inside the
-        bounds, or the min/max range does. Parquet stat truncation is
-        directionally safe here too: stored min <= true min and stored
-        max >= true max, so stored-min >= lo ⇒ true-min >= lo and
-        stored-max <= hi ⇒ true-max <= hi;
-      * ``{"in": [...]}`` — no nulls, and the exact value dictionary is
-        a SUBSET of the probe list (or min == max == v ∈ list: a
-        single-valued file needs no dictionary);
-      * ``"is null"`` — all rows null (``null_counts`` == rows);
-      * ``"not null"`` — zero nulls recorded.
-
-    A bound `_stat_norm` cannot canonicalize makes the column
-    unprovable — unlike the pruning dual, where treating it as an open
-    bound is the conservative reading, here it would FABRICATE a
-    proof."""
-    priors = priors or {}
-
-    def lookup(st: dict, c: str):
-        v = st.get(c)
-        if v is None:
-            for old in priors.get(c, ()):
-                v = st.get(old)
-                if v is not None:
-                    break
-        return v
-
-    def pred(f: dict) -> bool:
-        st = f.get("col_stats") or {}
-        nc = f.get("null_counts") or {}
-        dc = f.get("dicts") or {}
-        rows = f.get("rows")
-        for c, spec in where.items():
-            nulls = lookup(nc, c)
-            if spec == "is null":
-                if rows is None or nulls is None or nulls != rows:
-                    return False
-                continue
-            if spec == "not null":
-                if nulls != 0:
-                    return False
-                continue
-            # range / IN: every row must compare TRUE, so any null —
-            # or an unrecorded null count — defeats the proof
-            if nulls != 0:
-                return False
-            dv = lookup(dc, c)
-            rng = lookup(st, c)
-            try:
-                if isinstance(spec, dict):
-                    vals = [_stat_norm(v) for v in spec["in"]]
-                    if any(v is None for v in vals):
-                        return False
-                    vs = set(vals)
-                    if dv is not None and set(dv) <= vs:
-                        continue
-                    if (
-                        rng
-                        and rng[0] is not None
-                        and rng[0] == rng[1]
-                        and rng[0] in vs
-                    ):
-                        continue
-                    return False
-                lo, hi = spec
-                nlo = _stat_norm(lo) if lo is not None else None
-                nhi = _stat_norm(hi) if hi is not None else None
-                if (lo is not None and nlo is None) or (
-                    hi is not None and nhi is None
-                ):
-                    return False
-                if dv is not None and all(
-                    (nlo is None or v >= nlo) and (nhi is None or v <= nhi)
-                    for v in dv
-                ):
-                    continue
-                if (
-                    rng
-                    and rng[0] is not None
-                    and rng[1] is not None
-                    and (nlo is None or rng[0] >= nlo)
-                    and (nhi is None or rng[1] <= nhi)
-                ):
-                    continue
-            except TypeError:
-                return False  # incomparable types — no proof possible
-            return False
-        return True
-
-    return pred
+            if not any(hits):
+                return NONE
+            proven = all(hits)
+    if rng and rng[0] is not None and rng[1] is not None:
+        try:
+            if all(
+                (lo is not None and rng[1] < lo) or (hi is not None and rng[0] > hi)
+                for lo, hi in ivs
+            ):
+                return NONE
+            proven = proven or inside(*rng)
+        except TypeError:
+            pass  # incomparable types — the range decides nothing
+    return ALL if provable and proven else SOME
 
 
 def _col_nulls(meta, col: str) -> int | None:

@@ -8,8 +8,9 @@ builds its session, so the tuning story is consistent:
   job, see BASELINE.md "implied ceiling").
 * Arrow on — every Python-side transform in this engine is a vectorized
   pandas UDF / mapInPandas; nothing crosses the JVM boundary row-at-a-time.
-* shuffle.partitions sized for the local harness but overridable via env
-  for the two-parallelism scaling benchmark (local[8] vs local[32]).
+* master and shuffle.partitions sized to the cores this process may run
+  on, overridable via env for the two-parallelism scaling benchmark
+  (local[1] vs local[N]).
 """
 
 from __future__ import annotations
@@ -21,6 +22,12 @@ import tempfile
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> int:
+    """Cores a default session runs on: ``$SPARK_GRAFT_CPUS``, else the
+    cores this process may be scheduled on (its CPU affinity)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
 def build_session(
     app_name: str = "image-deid-etl-spark",
     master: str | None = None,
@@ -29,12 +36,12 @@ def build_session(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[local_cpus()]``.
     ``shuffle_partitions`` defaults to the core count — at 100 TB on a real
     cluster you would size this to ~2-3x total cores / target ~128-256 MB
     per shuffle partition; AQE coalesces the excess at runtime either way.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -2,7 +2,7 @@
 
 Resolved-bucket files the manifest PROVES tombstone-free — and, under a
 ``where``, whose min/max ranges, null counts or value dictionary prove
-every row matches (`_stats_full_match_pred`) — contribute their stored
+every row matches (`_stats_verdict` ALL) — contribute their stored
 row counts with zero I/O; everything else (tombstone-bearing files,
 stats-unprovable files, unresolved MoR/adaptive buckets) is counted by
 the exact read path. The invariant under test everywhere:
@@ -18,6 +18,8 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -25,8 +27,11 @@ from image_deid_etl_spark.cdc.engine import open_table, run_ingest
 from image_deid_etl_spark.cdc.feed import FeedSpec, write_feed
 from image_deid_etl_spark.cdc.merge import delete_where
 from image_deid_etl_spark.lake.table import (
+    ALL,
+    NONE,
     SnapshotTable,
     _norm_where,
+    _stats_verdict,
     bucket_expr,
 )
 
@@ -260,17 +265,15 @@ def test_snapshot_pins_and_selector_guard(spark, tmp_path):
 
 def test_unprovable_bound_scans_instead_of_fabricating(spark, tmp_path):
     """A bound _stat_norm cannot canonicalize (bool) must fall to the
-    exact scan — the pruning dual treats it as open (conservative), but
-    a full-match proof built on an open reading would overcount."""
-    from image_deid_etl_spark.lake.table import _stats_full_match_pred
-
-    pred = _stats_full_match_pred(_norm_where({"flag": (True, True)}))
+    exact scan — pruning reads it as open (conservative), but an ALL
+    proof built on an open reading would overcount."""
+    verdict = _stats_verdict(_norm_where({"flag": (True, True)}))
     f = {
         "rows": 10,
         "col_stats": {"flag": (0, 1)},
         "null_counts": {"flag": 0},
     }
-    assert pred(f) is False  # not provable — never a fabricated proof
+    assert verdict(f) != ALL  # not provable — never a fabricated proof
 
 
 def test_random_specs_always_equal_read(spark, tmp_path):
@@ -425,3 +428,137 @@ def test_register_temp_view_sql_surface(spark, tmp_path):
     spark.catalog.dropTempView("tv")
     spark.catalog.dropTempView("tv_all")
     spark.catalog.dropTempView("tv_ts")
+
+
+def test_exact_half_counts_in_one_job(spark, tmp_path):
+    """Residue files and unresolved buckets are ONE exact scan: a COUNT
+    needing both runs one Spark action. AQE is switched off for the
+    pin because it runs every shuffle map stage as a job of its own;
+    with it off, one job is one action."""
+    t = _make_table(spark, tmp_path)
+    t.commit_snapshot(
+        [],
+        None,
+        {"committed_feed_files": 3, "max_seq_seen": 3, "batch_id": 3},
+        unresolved_add={0},
+    )
+    t = SnapshotTable(t.root)
+    where = {"ts": (0, 120)}  # straddles the mixed cohort → residue
+    d = _check(spark, t, where=where)
+    assert d["files_scanned"] > 0 and d["unresolved_buckets"] == 1
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sc.setJobGroup("count_once", "count_rows exact half")
+        assert t.count_rows(spark, where=where) == d["rows"]
+        jobs = sc.statusTracker().getJobIdsForGroup("count_once")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(jobs) == 1
+
+
+def _rows_truth(values, spec, strict):
+    """Row-level truth of one normalized spec over a value column. A
+    bound or IN value `_stat_norm` cannot canonicalize has no defined
+    meaning here, so it is read both ways: open (``strict=False`` —
+    what a NONE verdict must rule out) and matching nothing
+    (``strict=True`` — what an ALL verdict must still hold under)."""
+    from image_deid_etl_spark.lake.table import _stat_norm
+
+    def bound_ok(b, holds):
+        if b is None:
+            return True
+        return holds() if _stat_norm(b) is not None else not strict
+
+    out = []
+    for v in values:
+        if spec == "is null":
+            out.append(v is None)
+        elif spec == "not null":
+            out.append(v is not None)
+        elif v is None:
+            out.append(False)
+        elif isinstance(spec, dict):
+            pts = [_stat_norm(p) for p in spec["in"]]
+            out.append(_stat_norm(v) in pts or (None in pts and not strict))
+        else:
+            lo, hi = spec
+            out.append(
+                bound_ok(lo, lambda: v >= lo) and bound_ok(hi, lambda: v <= hi)
+            )
+    return out
+
+
+_FAMILIES = {
+    "int": st.integers(-4, 4),
+    "str": st.sampled_from(["", "a", "ab", "b", "c"]),
+    "ts": st.integers(-3, 3).map(
+        lambda k: dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
+        + dt.timedelta(seconds=k)
+    ),
+}
+
+
+@st.composite
+def _verdict_case(draw):
+    """A two-column file: value columns, their manifest entry derived
+    the way `write_snapshot_files` records it, and a `where` spec."""
+    from image_deid_etl_spark.lake.table import _stat_norm
+
+    n = draw(st.integers(0, 6))
+    cap = draw(st.integers(1, 4))
+    f = {"rows": n}
+    cols, where, priors = {}, {}, {}
+    for c in ("x", "y"):
+        kind = draw(st.sampled_from(sorted(_FAMILIES)))
+        vals = _FAMILIES[kind]
+        # half the columns hold no NULL: ALL verdicts need zero nulls
+        elem = vals if draw(st.booleans()) else st.none() | vals
+        col = draw(st.lists(elem, min_size=n, max_size=n))
+        cols[c] = col
+        # pre-rename files record stats under the prior physical name
+        name = c
+        if draw(st.booleans()):
+            name = f"{c}_old"
+            priors[c] = [name]
+        live = [_stat_norm(v) for v in col if v is not None]
+        if draw(st.booleans()):
+            f.setdefault("null_counts", {})[name] = n - len(live)
+        if live and draw(st.booleans()):
+            f.setdefault("col_stats", {})[name] = [min(live), max(live)]
+        if len(set(live)) <= cap and draw(st.booleans()):
+            f.setdefault("dicts", {})[name] = sorted(set(live))
+        bound = st.none() | vals | st.just(True)  # bool: no canonical form
+        form = draw(st.sampled_from(["range", "in", "is null", "not null", "skip"]))
+        if form == "range":
+            where[c] = (draw(bound), draw(bound))
+        elif form == "in":
+            where[c] = {"in": draw(st.lists(vals | st.just(True), max_size=3))}
+        elif form != "skip":
+            where[c] = form
+    return cols, f, where, priors
+
+
+@settings(max_examples=1500, deadline=None, database=None)
+@given(_verdict_case())
+def test_stats_verdict_sound_against_rows(case):
+    """NONE must mean no row satisfies the spec and ALL that every row
+    does, for every spec form, unnormalizable bounds, empty IN lists,
+    missing stats and rename priors."""
+    cols, f, where, priors = case
+    verdict = _stats_verdict(_norm_where(where), priors)(f)
+    if verdict == NONE:
+        assert not any(_all_rows(cols, where, strict=False)), (f, where)
+    if verdict == ALL:
+        assert all(_all_rows(cols, where, strict=True)), (f, where)
+
+
+def _all_rows(cols, where, strict):
+    n = len(next(iter(cols.values())))
+    hit = [True] * n
+    for c, spec in _norm_where(where).items():
+        hit = [a and b for a, b in zip(hit, _rows_truth(cols[c], spec, strict))]
+    return hit

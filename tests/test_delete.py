@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from image_deid_etl_spark.cdc.merge import SimulatedCrash, delete_where, merge_into
-from image_deid_etl_spark.lake.table import SnapshotTable, _stats_entry_pred
+from image_deid_etl_spark.lake.table import NONE, SnapshotTable, _stats_verdict
 
 SCHEMA = T.StructType(
     [
@@ -380,8 +380,8 @@ def test_tags_pin_snapshots_against_expiry(spark, tmp_path):
 def _files_matching(t, where):
     """Manifest entries a `read(where=...)` would list (the deterministic
     prune measure — file counts, not wall time)."""
-    pred = _stats_entry_pred({c: b for c, b in where.items()})
-    return [f for f in t.manifest()["files"] if pred(f)]
+    verdict = _stats_verdict({c: b for c, b in where.items()})
+    return [f for f in t.manifest()["files"] if verdict(f) != NONE]
 
 
 def test_cluster_by_compaction_tightens_data_skipping(spark, tmp_path):
