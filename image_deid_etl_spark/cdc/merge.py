@@ -53,6 +53,7 @@ is on as the runtime backstop.
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 
@@ -60,8 +61,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..lake import bloom
 from ..lake.table import (
     SnapshotTable,
+    _ranges_overlap,
     emit_change_rows,
     key_expr,
     lww_order_cols,
@@ -73,15 +76,6 @@ from .skew import salted_repartition
 ENVELOPE_COLS = {"seq", "op", "ts"}
 
 
-def _ranges_overlap(f: dict, lo: str, hi: str) -> bool:
-    """Conservative file-vs-batch key-range intersection test: missing
-    stats → candidate."""
-    fmin, fmax = f.get("key_min"), f.get("key_max")
-    if fmin is None or fmax is None:
-        return True
-    return not (fmax < lo or fmin > hi)
-
-
 def _bloom_prune(
     table: SnapshotTable, incoming: DataFrame, candidates: list[dict]
 ) -> list[dict]:
@@ -89,11 +83,10 @@ def _bloom_prune(
     provably holds none of them — dropped without ANY data read. Keeps
     the per-commit prune cost O(batch keys), not O(table key column).
 
-    Hashes are the write-time pair (xxhash64(_key[, seed]) mod m): the
-    raw 64-bit hashes come from the SAME JVM function, the mod runs in
-    numpy (both sides non-negative-mod). Bitmap tests are vectorized per
-    Arrow batch; the output is file paths only. Files without blooms
-    (pre-bloom manifests) always survive to the exact scan.
+    Hashes, sidecar reads and the membership test are the sidecar
+    format's own (`lake.bloom`): the write-time JVM hash pair, tested
+    vectorized per Arrow batch; the output is file paths only. Files
+    without blooms (pre-bloom manifests) always survive to the exact scan.
 
     Probing is EXECUTOR-side (r4): the driver ships only the candidate
     metadata — (bucket → [(path, sidecar path, m)]), a few strings per
@@ -110,7 +103,6 @@ def _bloom_prune(
     """
     meta: dict[int, list[tuple[str, str, int]]] = {}
     out: list[dict] = []
-    n_bloomed = 0
     for f in candidates:
         bp = f.get("bloom_path")
         if not bp:
@@ -119,60 +111,28 @@ def _bloom_prune(
             meta.setdefault(f["bucket"], []).append(
                 (f["path"], os.path.join(table.root, bp), int(f["bloom_m"]))
             )
-            n_bloomed += 1
-    if not n_bloomed:
+    if not meta:
         return out
 
     def probe(batches):
-        import numpy as np
         import pandas as pd
 
-        bitmaps: dict[str, "np.ndarray | None"] = {}
+        sidecar = functools.lru_cache(maxsize=None)(bloom.open_sidecar)
         keep: set[str] = set()  # bloom hit OR unreadable sidecar
-        decided: set[str] = set()
         for pdf in batches:
             for b, grp in pdf.groupby("_bucket"):
-                flist = meta.get(int(b))
-                if not flist:
-                    continue
                 h1 = grp["_h1"].to_numpy()
                 h2 = grp["_h2"].to_numpy()
-                for path, bpath, m in flist:
-                    if path in decided:
+                for path, bpath, m in meta.get(int(b), ()):
+                    if path in keep:
                         continue
-                    if bpath not in bitmaps:
-                        try:
-                            bm = np.memmap(bpath, dtype=np.uint8, mode="r")
-                            # truncated/empty sidecar (e.g. crash between
-                            # sidecar write and manifest commit on a
-                            # non-fsynced filesystem): indexing it would
-                            # raise mid-job — treat as unreadable instead
-                            if len(bm) != m // 8:
-                                bm = None
-                        except (OSError, ValueError):
-                            # np.memmap raises ValueError on a 0-byte file
-                            bm = None
-                        bitmaps[bpath] = bm
-                    bits = bitmaps[bpath]
-                    if bits is None:
+                    bits = sidecar(bpath, m)
+                    if bits is None or bloom.may_contain(bits, m, h1, h2).any():
                         keep.add(path)
-                        decided.add(path)
-                        continue
-                    i1 = (h1 % m).astype(np.int64)
-                    i2 = (h2 % m).astype(np.int64)
-                    ok = (bits[i1 >> 3] >> (i1 & 7).astype(np.uint8)) & 1
-                    ok &= (bits[i2 >> 3] >> (i2 & 7).astype(np.uint8)) & 1
-                    if ok.any():
-                        keep.add(path)
-                        decided.add(path)
         yield pd.DataFrame({"p": sorted(keep)})
 
     probed = (
-        incoming.select(
-            F.col("_bucket"),
-            F.xxhash64("_key").alias("_h1"),
-            F.xxhash64("_key", F.lit(1)).alias("_h2"),
-        )
+        incoming.select(F.col("_bucket"), *bloom.hash_pair())
         # co-locate each bucket's keys so its sidecars are mapped once
         .repartition("_bucket")
         .mapInPandas(probe, "p string")
@@ -229,7 +189,7 @@ def _sampled_existing_fraction(
         import numpy as np
         import pandas as pd
 
-        bitmaps: dict[str, "np.ndarray | None"] = {}
+        sidecar = functools.lru_cache(maxsize=None)(bloom.open_sidecar)
         probed: dict[int, int] = {}
         hit: dict[int, int] = {}
         budget = per_task_cap
@@ -246,22 +206,9 @@ def _sampled_existing_fraction(
                 h2 = grp["_h2"].to_numpy()
                 found = np.zeros(len(grp), dtype=bool)
                 for bpath, m in flist:
-                    if bpath not in bitmaps:
-                        try:
-                            bm = np.memmap(bpath, dtype=np.uint8, mode="r")
-                            if len(bm) != m // 8:
-                                bm = None
-                        except (OSError, ValueError):
-                            bm = None
-                        bitmaps[bpath] = bm
-                    bits = bitmaps[bpath]
-                    if bits is None:
-                        continue
-                    i1 = (h1 % m).astype(np.int64)
-                    i2 = (h2 % m).astype(np.int64)
-                    ok = (bits[i1 >> 3] >> (i1 & 7).astype(np.uint8)) & 1
-                    ok &= (bits[i2 >> 3] >> (i2 & 7).astype(np.uint8)) & 1
-                    found |= ok.astype(bool)
+                    bits = sidecar(bpath, m)
+                    if bits is not None:  # unreadable: no hit from this file
+                        found |= bloom.may_contain(bits, m, h1, h2)
                 key = int(b)
                 probed[key] = probed.get(key, 0) + len(grp)
                 hit[key] = hit.get(key, 0) + int(found.sum())
@@ -273,11 +220,7 @@ def _sampled_existing_fraction(
             }
         )
 
-    narrow = incoming.select(
-        F.col("_bucket"),
-        F.xxhash64("_key").alias("_h1"),
-        F.xxhash64("_key", F.lit(1)).alias("_h2"),
-    )
+    narrow = incoming.select(F.col("_bucket"), *bloom.hash_pair())
     if key_counts:
         # seeded-hash sample: uniform in [0,1) from a probe-only hash
         # seed, thinning each bucket to ~target_per_bucket expected keys.
@@ -442,15 +385,22 @@ def _match_files(
             rows_by_bucket[f["bucket"]] = rows_by_bucket.get(f["bucket"], 0) + (
                 f.get("rows") or 0
             )
-        est = 0.0
-        for f in candidates:
-            b = f["bucket"]
-            nk = key_counts.get(b, 0)
-            fr = f.get("rows") or 0
-            brows = rows_by_bucket.get(b, 0)
-            if nk <= 0 or brows <= 0 or fr <= 0:
-                continue
-            est += fr * (1.0 - (1.0 - min(1.0, fr / brows)) ** nk)
+
+        def estimate(scale: dict[int, float]) -> float:
+            # uniform-keys model; a bucket's batch keys scale by the
+            # fraction that exist (1.0 when unmeasured: the raw model)
+            est = 0.0
+            for f in candidates:
+                b = f["bucket"]
+                nk = key_counts.get(b, 0) * scale.get(b, 1.0)
+                fr = f.get("rows") or 0
+                brows = rows_by_bucket.get(b, 0)
+                if nk <= 0 or brows <= 0 or fr <= 0:
+                    continue
+                est += fr * (1.0 - (1.0 - min(1.0, fr / brows)) ** nk)
+            return est
+
+        est = estimate({})
         if est >= frac_t * live_rows and est >= amp_t * batch_keys:
             # the raw model assumes every batch key EXISTS; on a mature
             # table (bloom sidecars cover the candidates) a tiny sampled
@@ -462,16 +412,7 @@ def _match_files(
                 table, incoming, candidates, key_counts=key_counts
             )
             if exist_frac is not None:
-                est2 = 0.0
-                for f in candidates:
-                    b = f["bucket"]
-                    nk = key_counts.get(b, 0) * exist_frac.get(b, 1.0)
-                    fr = f.get("rows") or 0
-                    brows = rows_by_bucket.get(b, 0)
-                    if nk <= 0 or brows <= 0 or fr <= 0:
-                        continue
-                    est2 += fr * (1.0 - (1.0 - min(1.0, fr / brows)) ** nk)
-                est = est2
+                est = estimate(exist_frac)
             if est >= frac_t * live_rows and est >= amp_t * batch_keys:
                 # the ladder never runs, but the RANGE-PRUNED candidate
                 # set is a conservative superset of every file holding a

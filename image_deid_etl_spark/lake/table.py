@@ -66,6 +66,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import bloom
+
 CURRENT = "_current"
 REFS = "_refs.json"
 MANIFESTS = "_manifests"
@@ -73,12 +75,6 @@ LINEAGE = "_lineage"
 BLOOMS = "_blooms"
 CHANGELOG = "_changelog"
 DATA = "data"
-
-#: bloom sizing: ~10 bits/key (k=2 hashes → ~3% fp), power-of-two bits,
-#: capped at 512 KiB per file. Stored as sidecar binaries (Iceberg puffin
-#: analog) — manifests stay small; only candidate files' blooms are read.
-_BLOOM_MIN_BITS = 1 << 13
-_BLOOM_MAX_BITS = 1 << 22
 
 #: engine-managed columns appended to the user schema in every data file
 ENGINE_COLS = [
@@ -2426,8 +2422,6 @@ class SnapshotTable:
         the MERGE prune ladder (bucket → manifest key range → bloom
         sidecar) and return ``(keys_df, candidate_abs_paths)``. Split out
         so tests can pin the file bound without reading data."""
-        import numpy as np
-
         key_cols = self.key_cols()
         rows = []
         for k in keys:
@@ -2453,37 +2447,26 @@ class SnapshotTable:
         info = kdf.select(
             key_expr(key_cols).alias("_key"),
             effective_bucket_expr(spec, key_cols).alias("_bucket"),
-            F.xxhash64(key_expr(key_cols)).alias("_h1"),
-            F.xxhash64(key_expr(key_cols), F.lit(1)).alias("_h2"),
+            *bloom.hash_pair(key_expr(key_cols)),
         ).collect()
         by_bucket: dict[int, list] = {}
         for r in info:
             by_bucket.setdefault(r["_bucket"], []).append(r)
         paths: list[str] = []
         for f in self.files_for_buckets(set(by_bucket), snapshot_id):
-            ks = by_bucket.get(f["bucket"], ())
-            fmin, fmax = f.get("key_min"), f.get("key_max")
-            if fmin is not None and fmax is not None:
-                # conservative range leg: legacy/statless files keep all
-                ks = [r for r in ks if fmin <= r["_key"] <= fmax]
+            # conservative range leg: legacy/statless files keep all
+            ks = [
+                r for r in by_bucket.get(f["bucket"], ())
+                if _ranges_overlap(f, r["_key"], r["_key"])
+            ]
             if not ks:
                 continue
-            bp = f.get("bloom_path")
-            if bp:
+            if f.get("bloom_path"):
                 m = int(f["bloom_m"])
-                try:
-                    bits = np.memmap(
-                        os.path.join(self.root, bp), dtype=np.uint8, mode="r"
-                    )
-                    if len(bits) != m // 8:
-                        bits = None  # truncated sidecar — keep the file
-                except (OSError, ValueError):
-                    bits = None
-                if bits is not None and not any(
-                    (bits[(r["_h1"] % m) >> 3] >> ((r["_h1"] % m) & 7)) & 1
-                    and (bits[(r["_h2"] % m) >> 3] >> ((r["_h2"] % m) & 7)) & 1
-                    for r in ks
-                ):
+                bits = bloom.open_sidecar(os.path.join(self.root, f["bloom_path"]), m)
+                if bits is not None and not bloom.may_contain(
+                    bits, m, [r["_h1"] for r in ks], [r["_h2"] for r in ks]
+                ).any():
                     continue  # bloom proves no requested key is here
             paths.append(os.path.join(self.root, f["path"]))
         return kdf, paths
@@ -3166,8 +3149,7 @@ class SnapshotTable:
             # key hashes the bloom build later reads as two int columns
             # (the explicit read schema hides all three from normal scans)
             .withColumn("_key", key_expr(self.key_cols()))
-            .withColumn("_bh1", F.xxhash64("_key"))
-            .withColumn("_bh2", F.xxhash64("_key", F.lit(1)))
+            .select("*", *bloom.hash_pair(names=("_bh1", "_bh2")))
             # prefix (_pb, _fg) satisfies the dynamic-partition writer's
             # required ordering (no second SortExec), _key then guarantees
             # each emitted chunk is key-clustered with tight min/max stats.
@@ -3275,13 +3257,9 @@ class SnapshotTable:
         if not entries:
             return {}
 
-        max_rows = max(e["rows"] for e in entries) or 1
-        m = _BLOOM_MIN_BITS
-        while m < max_rows * 10 and m < _BLOOM_MAX_BITS:
-            m <<= 1
+        m = bloom.size_bits(max(e["rows"] for e in entries) or 1)
 
         def build_partials(batches):
-            import numpy as np
             import pandas as pd
 
             partial: dict[str, "np.ndarray"] = {}
@@ -3289,16 +3267,13 @@ class SnapshotTable:
                 for fname, grp in pdf.groupby("f"):
                     bits = partial.get(fname)
                     if bits is None:
-                        bits = partial[fname] = np.zeros(m // 8, dtype=np.uint8)
+                        bits = partial[fname] = bloom.empty(m)
                     for col in ("_bh1", "_bh2"):
                         if grp[col].isna().any():
                             # pre-upgrade file without hash columns — the
                             # all-zero-bitmap guard below drops it
                             continue
-                        h = (grp[col].to_numpy() % m).astype(np.int64)
-                        np.bitwise_or.at(
-                            bits, h >> 3, np.uint8(1) << (h & 7).astype(np.uint8)
-                        )
+                        bloom.set_bits(bits, m, grp[col].to_numpy())
             yield pd.DataFrame(
                 {"f": list(partial), "bloom": [b.tobytes() for b in partial.values()]}
             )
@@ -3338,13 +3313,7 @@ class SnapshotTable:
                 # (always exact-scanned) instead
                 continue
             name = f"bloom-{uuid.uuid4().hex}.bin"
-            with open(os.path.join(bdir, name), "wb") as fh:
-                fh.write(bits.tobytes())
-                fh.flush()
-                # the manifest referencing this sidecar commits durably
-                # (fsync + rename in _write_manifest); fsync the bitmap
-                # too or a power loss can leave a referenced 0-byte file
-                os.fsync(fh.fileno())
+            bloom.save(os.path.join(bdir, name), bits)
             upd = {"bloom_path": os.path.join(BLOOMS, name), "bloom_m": m}
             e.update(upd)
             updates[e["path"]] = upd
@@ -4184,10 +4153,11 @@ class SnapshotTable:
         # orphan sweep: sidecars referenced by NO retained manifest (lazy
         # blooms built in a merge that crashed before its commit). A
         # swept bloom raced by a landing merge would only degrade that
-        # file to an always-candidate at probe time (memmap fallback in
-        # cdc/merge._bloom_prune), but `validate` would report it missing
-        # forever (build_blooms only builds for entries WITHOUT a
-        # bloom_path) — the same grace window keeps fresh sidecars safe.
+        # file to an always-candidate at probe time (unreadable-sidecar
+        # fallback in lake/bloom.open_sidecar), but `validate` would
+        # report it missing forever (build_blooms only builds for entries
+        # WITHOUT a bloom_path) — the same grace window keeps fresh
+        # sidecars safe.
         bdir = os.path.join(self.root, BLOOMS)
         if os.path.isdir(bdir):
             for fn in os.listdir(bdir):
@@ -4519,6 +4489,15 @@ def _where_cond(where: dict):
             if hi is not None:
                 cond = cond & (F.col(c) <= F.lit(hi))
     return cond
+
+
+def _ranges_overlap(f: dict, lo: str, hi: str) -> bool:
+    """Conservative manifest-entry vs ``[lo, hi]`` key-range
+    intersection test: missing key stats → candidate."""
+    fmin, fmax = f.get("key_min"), f.get("key_max")
+    if fmin is None or fmax is None:
+        return True
+    return not (fmax < lo or fmin > hi)
 
 
 def _stat_norm(v):

@@ -565,7 +565,7 @@ def test_bloom_prune_is_executor_side(spark, tmp_path, monkeypatch):
     upd = t.build_blooms(spark, entries)
     assert upd  # sidecars exist for every file
     # no driver-side bitmap loading exists anymore: bitmaps are opened
-    # only inside the probe tasks (np.memmap in _bloom_prune's closure);
+    # only inside the probe tasks (lake.bloom.open_sidecar in _bloom_prune's probe);
     # guard against a driver-side reader being reintroduced
     import builtins
 

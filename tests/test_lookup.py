@@ -9,6 +9,8 @@ listing scan).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -189,3 +191,87 @@ def test_lookup_parity_over_ingest_lifecycle(spark, tmp_path):
         if (r.repo, r.path) in kset
     )
     assert got == exp and len(got) == len(live)
+
+
+def _probe_df(spark, t, *keys):
+    """The MERGE probes' input shape: ``_bucket`` + ``_key`` per key."""
+    from image_deid_etl_spark.lake.table import key_expr
+
+    return spark.createDataFrame(list(keys), "repo string, path string").select(
+        bucket_expr(t.n_buckets(), ["repo", "path"]).alias("_bucket"),
+        key_expr(["repo", "path"]).alias("_key"),
+    )
+
+
+def test_bloom_driver_and_executor_paths_keep_the_same_files(spark, tmp_path):
+    """The driver-side lookup leg and the executor-side MERGE probe test
+    the same sidecars with the same hash pair and kernel: for keys inside
+    every file's range, both keep exactly the same files."""
+    from image_deid_etl_spark.cdc.merge import _bloom_prune
+
+    t = SnapshotTable.create(
+        str(tmp_path / "t"), SCHEMA, ["repo", "path"], 1, target_file_rows=1000
+    )
+    _commit(spark, t, [("r", f"p{i:04d}", "even") for i in range(0, 400, 2)], 1)
+    _commit(spark, t, [("r", f"p{i:04d}", "odd") for i in range(1, 400, 2)], 2)
+    t.commit_snapshot(
+        [], None, {"batch_id": 9},
+        entry_updates=t.build_blooms(spark, t.manifest()["files"]),
+    )
+    files = t.manifest()["files"]
+    assert len(files) == 2 and all(f.get("bloom_path") for f in files)
+    kept = {}
+    for p in ("p0100", "p0101", "p0200x", "p0301x"):
+        key = ("r", p)
+        _kdf, driver = t._lookup_candidates(spark, [key])
+        executor = _bloom_prune(t, _probe_df(spark, t, key), files)
+        kept[p] = sorted(os.path.join(t.root, f["path"]) for f in executor)
+        assert sorted(driver) == kept[p], p
+    # not vacuous: each stored key keeps only its own commit's file
+    assert len(kept["p0100"]) == len(kept["p0101"]) == 1
+    assert kept["p0100"] != kept["p0101"]
+
+
+def test_unreadable_sidecar_keeps_its_file(spark, tmp_path):
+    """A missing, 0-byte or truncated sidecar proves nothing: both MERGE
+    probes and the point lookup keep its file a candidate (the exact
+    scan guards correctness) instead of raising mid-job."""
+    from image_deid_etl_spark.cdc.merge import (
+        _bloom_prune,
+        _sampled_existing_fraction,
+    )
+
+    t = SnapshotTable.create(
+        str(tmp_path / "t"), SCHEMA, ["repo", "path"], 1, target_file_rows=1000
+    )
+    _commit(spark, t, [("r", f"p{i:03d}", f"c{i}") for i in range(0, 400, 2)], 1)
+    t.commit_snapshot(
+        [], None, {"batch_id": 9},
+        entry_updates=t.build_blooms(spark, t.manifest()["files"]),
+    )
+    files = t.manifest()["files"]
+    [target] = files
+    target_abs = os.path.join(t.root, target["path"])
+    sidecar = os.path.join(t.root, target["bloom_path"])
+    good = open(sidecar, "rb").read()
+    stored, absent = ("r", "p100"), ("r", "p101")  # absent is in range
+    # healthy sidecar: the bloom alone rejects the absent key
+    assert t._lookup_candidates(spark, [absent])[1] == []
+    assert _bloom_prune(t, _probe_df(spark, t, absent), files) == []
+
+    for fault, data in (
+        ("missing", None), ("0-byte", b""), ("truncated", good[: len(good) // 2])
+    ):
+        if data is None:
+            os.remove(sidecar)
+        else:
+            with open(sidecar, "wb") as fh:
+                fh.write(data)
+        assert t._lookup_candidates(spark, [absent])[1] == [target_abs], fault
+        assert _bloom_prune(t, _probe_df(spark, t, absent), files) == [target], fault
+        got = [(r.path, r.content) for r in t.lookup_keys(spark, [stored]).collect()]
+        assert got == [("p100", "c100")], fault
+        # an unreadable sidecar contributes no hit (and no error)
+        assert _sampled_existing_fraction(
+            t, _probe_df(spark, t, stored), files
+        ) == {0: 0.0}, fault
