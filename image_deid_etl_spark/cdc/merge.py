@@ -161,7 +161,10 @@ def _sampled_existing_fraction(
 
     Returns None when sidecars cover < ``min_coverage`` of the candidate
     rows (a young table whose files never ran the ladder — no reliable
-    signal; the caller keeps the raw estimate). Probe cost is O(constant)
+    signal; the caller keeps the raw estimate). A sidecar
+    `bloom.open_sidecar` cannot open counts as no sidecar: probing it
+    would score every key of its file absent, i.e. "all keys new".
+    Probe cost is O(constant)
     regardless of the batch's partitioning (r4 VERDICT item 6): with
     ``key_counts`` (bucket → approx distinct batch keys, the engine's
     per-batch stats), a deterministic seeded-hash PRE-FILTER keeps each
@@ -175,7 +178,12 @@ def _sampled_existing_fraction(
     keys fall back to fraction 1.0 (raw model).
     """
     cand_rows = sum(f.get("rows") or 0 for f in candidates)
-    bloomed = [f for f in candidates if f.get("bloom_path")]
+    bloomed = [
+        f for f in candidates
+        if f.get("bloom_path") and bloom.open_sidecar(
+            os.path.join(table.root, f["bloom_path"]), int(f["bloom_m"])
+        ) is not None
+    ]
     bloomed_rows = sum(f.get("rows") or 0 for f in bloomed)
     if cand_rows <= 0 or bloomed_rows < min_coverage * cand_rows:
         return None

@@ -25,7 +25,9 @@ Two problems these solve (round-6 optimization, guide §2):
   eager `localCheckpoint`, so N references cost one computation plus N
   reads of the materialized blocks. This is per-invocation plan surgery,
   not cross-run caching: every fresh call of a query builder recomputes
-  from the Parquet inputs.
+  from the Parquet inputs. (Only a table file's schema outlives a call:
+  `plans.queries._t` memoizes Spark's inferred schema per file identity,
+  never data.)
 
 `band_pairs` is the one banded-pair generator every LSH-family operator
 (MinHash and SimHash dedup, sign-bit kNN, embedding near-dup) runs its

@@ -207,23 +207,25 @@ def _hyperplane(plane: int, dim: int) -> list[float]:
     return [(((i * 37 + plane * 101) % 19) - 9) / 9.0 for i in range(dim)]
 
 
-def lsh_bucket_banded(vec: Column, dim: int, n_planes: int, band: int) -> Column:
+def lsh_bucket_banded(vec_col: str, dim: int, n_planes: int, band: int) -> Column:
     """Band `band`'s sign-bit bucket: planes ``band*n_planes ..`` — each
-    band sees an independent set of hyperplanes (OR-amplification)."""
+    band sees an independent set of hyperplanes (OR-amplification).
+
+    Built as ONE SQL string: the n_planes×dim coefficient literals and the
+    fold lambdas would otherwise cost one py4j round trip each while the
+    query is built. The expression is the Column-DSL fold's exact
+    counterpart (sequential double multiply/adds, ``>= 0`` → ``'1'``);
+    ``repr`` + ``D`` keeps every coefficient the same double literal."""
+    vec = "`" + vec_col.replace("`", "``") + "`"
     bits = []
     for p in range(n_planes):
-        coeffs = _hyperplane(band * n_planes + p, dim)
-        dot = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(c) for c in coeffs]),
-                lambda x, c: x.cast("double") * c,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+        coeffs = ", ".join(f"{c!r}D" for c in _hyperplane(band * n_planes + p, dim))
+        dot = (
+            f"aggregate(zip_with({vec}, array({coeffs}), (x, y) -> CAST(x AS DOUBLE) * y), "
+            "0.0D, (x, y) -> x + y)"
         )
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(F.lit(f"{band}|"), *bits)
+        bits.append(f"CASE WHEN {dot} >= 0 THEN '1' ELSE '0' END")
+    return F.expr(f"concat('{band}|', " + ", ".join(bits) + ")")
 
 
 def _hamming1_probes(bucket: Column, n_planes: int) -> Column:
@@ -299,7 +301,7 @@ def lsh_band_table(
         F.col(id_col),
         F.explode(
             F.array(
-                *[lsh_bucket_banded(F.col(vec_col), dim, n_planes, b) for b in range(n_bands)]
+                *[lsh_bucket_banded(vec_col, dim, n_planes, b) for b in range(n_bands)]
             )
         ).alias("bucket"),
     )

@@ -13,10 +13,12 @@ Cross-engine determinism rules (so value-hash comparison is exact):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..cdc.scrub import duckdb_scrub_expr, scrubbed_native
 from ..operators import dedup, multimodal, similarity, text
@@ -45,8 +47,25 @@ def register(name: str, sql: str | None = None):
     return deco
 
 
+#: Spark's own inferred schema per table file: realpath → (st_mtime_ns,
+#: st_size, schema). A rewritten file no longer matches its entry and is
+#: inferred again. Without a given schema every read runs a 1-task
+#: inference job; only the schema is memoized, never data.
+_SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    real = os.path.realpath(path)
+    try:
+        st = os.stat(real)
+    except OSError:  # not a local file (e.g. a remote URI): Spark infers
+        return spark.read.parquet(path)
+    ident = (st.st_mtime_ns, st.st_size)
+    hit = _SCHEMAS.get(real)
+    if hit is None or hit[:2] != ident:
+        hit = _SCHEMAS[real] = (*ident, spark.read.parquet(path).schema)
+    return spark.read.schema(hit[2]).parquet(path)
 
 
 def _dec(col, p=12, s=2):

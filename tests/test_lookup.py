@@ -258,6 +258,7 @@ def test_unreadable_sidecar_keeps_its_file(spark, tmp_path):
     # healthy sidecar: the bloom alone rejects the absent key
     assert t._lookup_candidates(spark, [absent])[1] == []
     assert _bloom_prune(t, _probe_df(spark, t, absent), files) == []
+    assert _sampled_existing_fraction(t, _probe_df(spark, t, stored), files) == {0: 1.0}
 
     for fault, data in (
         ("missing", None), ("0-byte", b""), ("truncated", good[: len(good) // 2])
@@ -271,7 +272,13 @@ def test_unreadable_sidecar_keeps_its_file(spark, tmp_path):
         assert _bloom_prune(t, _probe_df(spark, t, absent), files) == [target], fault
         got = [(r.path, r.content) for r in t.lookup_keys(spark, [stored]).collect()]
         assert got == [("p100", "c100")], fault
-        # an unreadable sidecar contributes no hit (and no error)
+        # an unreadable sidecar counts as no sidecar (and raises no
+        # error): a bucket with only unreadable ones keeps the raw model
+        # instead of reading as "all keys new" ({0: 0.0})
         assert _sampled_existing_fraction(
             t, _probe_df(spark, t, stored), files
-        ) == {0: 0.0}, fault
+        ) is None, fault
+        # ... and is left out of the probe even with no coverage gate
+        assert _sampled_existing_fraction(
+            t, _probe_df(spark, t, stored), files, min_coverage=0.0
+        ) == {}, fault

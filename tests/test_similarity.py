@@ -127,3 +127,51 @@ def test_arrow_pair_scoring_bit_identical_to_jvm_fold(spark):
     jb = jvm["_cos"].to_numpy().view(np.int64)
     ab = arrow["_cos"].to_numpy().view(np.int64)
     assert (jb == ab).all()
+
+
+def _band_bucket_reference(vec, dim: int, n_planes: int, band: int) -> str:
+    """Plain-Python band bucket: a sequential double fold over the plane's
+    coefficients, bit ``'1'`` iff the dot is ``>= 0``."""
+    from image_deid_etl_spark.operators.similarity import _hyperplane
+
+    bits = []
+    for p in range(n_planes):
+        dot = 0.0
+        for x, c in zip(vec, _hyperplane(band * n_planes + p, dim)):
+            dot = dot + float(x) * c
+        bits.append("1" if dot >= 0 else "0")
+    return f"{band}|" + "".join(bits)
+
+
+def test_band_table_matches_python_reference(spark):
+    """`lsh_band_table` buckets equal the plain-Python fold bit for bit,
+    on float32 vectors with negative dots and exactly-zero dots (the zero
+    vector, and the unit vector e_0 against plane 11, whose first
+    coefficient is 0): a ``> 0`` bit rule would flip those."""
+    import numpy as np
+
+    from image_deid_etl_spark.operators.similarity import _hyperplane, lsh_band_table
+
+    dim, n_planes, n_bands = 64, 12, 3
+    assert _hyperplane(11, dim)[0] == 0.0
+    rng = np.random.RandomState(5)
+    vecs = [v for v in rng.randn(196, dim).astype(np.float32)]
+    e0 = np.zeros(dim, dtype=np.float32)
+    e0[0] = 1.0
+    vecs += [np.zeros(dim, dtype=np.float32), e0, -e0, np.full(dim, -1.0, dtype=np.float32)]
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    got = sorted(
+        tuple(r) for r in lsh_band_table(e, "vec_id", "embedding", dim, n_planes, n_bands).collect()
+    )
+    want = sorted(
+        (i, _band_bucket_reference(v, dim, n_planes, b)) for i, v in rows for b in range(n_bands)
+    )
+    assert len(got) == 200 * n_bands
+    assert got == want
+    bits = "".join(b.split("|")[1] for _, b in want)
+    assert "0" in bits and "1" in bits  # both signs occur
+    zero_vec = [b for i, b in want if i == 196]
+    assert all(set(b.split("|")[1]) == {"1"} for b in zero_vec)  # dot == 0 → '1'
+    assert [b for i, b in want if i == 197][0][2 + 11] == "1"  # e_0 · plane 11 == 0
