@@ -100,16 +100,16 @@ def band_pairs(
     banded: DataFrame,
     id_col: str,
     key: str,
-    probe: Callable[[Column], Column] | None = None,
+    probe: Callable[[str], Column] | None = None,
 ) -> DataFrame:
     """Distinct candidate pairs from a band table: rows of `banded` that
     share a `key` value pair up, each unordered pair once, as
     ``id_a < id_b``. Every other column of `banded` is carried out once
     per side, as ``<col>_a`` / ``<col>_b``.
 
-    ``probe`` maps the key column to an array of keys that the QUERY (a)
-    side probes instead of its own key — e.g. multi-probe LSH's Hamming-1
-    neighbours. The candidate (b) side always stays home-only.
+    ``probe`` maps the key column's name to an array of keys that the
+    QUERY (a) side probes instead of its own key — e.g. multi-probe LSH's
+    Hamming-1 neighbours. The candidate (b) side always stays home-only.
 
     Plan policy, owned here so every LSH-family operator shares it:
 
@@ -128,7 +128,7 @@ def band_pairs(
     carried = [c for c in banded.columns if c not in (id_col, key)]
     a = banded
     if probe is not None:
-        a = banded.select(id_col, *carried, F.explode(probe(F.col(key))).alias(key))
+        a = banded.select(id_col, *carried, F.explode(probe(key)).alias(key))
     a, b = a.alias("a"), banded.alias("b")
     return (
         a.join(b, on=key)
